@@ -200,8 +200,6 @@ WIDE_SCHEMA = FEATURE_SCHEMA + ", " + ", ".join(
 def featurize_grouped(
     df: DataFrame,
     gap_s: float = 1800.0,
-    rate_window_s: int = 60,
-    roll_rows: int = 5,
     wide: bool = False,
 ) -> DataFrame:
     """One Arrow batch per conversation → pandas kernel → feature rows.
@@ -217,9 +215,7 @@ def featurize_grouped(
     """
 
     def kernel(pdf):
-        return featurize_pdf(
-            pdf, gap_s=gap_s, rate_window_s=rate_window_s, roll_rows=roll_rows, wide=wide
-        )
+        return featurize_pdf(pdf, gap_s=gap_s, wide=wide)
 
     return df.groupBy("conv_id").applyInPandas(
         kernel, schema=WIDE_SCHEMA if wide else FEATURE_SCHEMA

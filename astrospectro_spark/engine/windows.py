@@ -15,6 +15,11 @@ sort key). Catalyst inserts one Sort per family switch, so the 175-
 column wide plan runs 3 sorts instead of 16 — at 10^12 rows each
 avoided Sort is a full pass over every partition.
 
+Every feature is defined once, in :func:`feature_plan`, which takes its
+window partition columns: ``("conv_id",)`` here, ``("conv_id", "_tgt")``
+for the salted chunks of :mod:`engine.skew`, which recombine the running
+columns at the plan's stitch point by their stitch kind.
+
 Leakage contract: every frame ends at the CURRENT ROW
 (``rowsBetween(..., 0)`` / ``rangeBetween(..., 0)``) — no feature may
 read turns with ``ts >`` the current turn. Lead-based columns are
@@ -249,8 +254,6 @@ def wide_local_exprs(enum_shuffle: bool = False) -> dict[str, Column]:
     post-merge composite battery, src/pipeline/feature_engineering.py:
     1403-1712): pure per-row expressions over already-present columns
     (``text_len``, ``lag1_ts_gap_s``, ``prev_role``, ``tool``, ``ts``).
-    Shared verbatim by the plain and the salted featurizers — row-local
-    expressions commute with chunking, so parity holds by construction.
     ``prev_role`` and ``lag1_ts_gap_s`` must exist before applying.
 
     ``enum_shuffle``: role/prev_role hold 64-bit codes, ``tool_len`` is
@@ -431,72 +434,103 @@ def _ts_us(col: str = "ts") -> Column:
     reduction order)."""
     return F.unix_micros(F.col(col).cast("timestamp"))
 
+# ---- stitch kinds. The plan runs over one window partition; the salted
+# path (engine.skew) runs it per (conv_id, chunk) over the chunk's rows
+# plus a copied suffix of the history before the chunk (its context
+# rows). Bounded columns — lags, rows frames, growing-frame range
+# differences, lag differences of running sums, block min/max — read at
+# most plan_lookback() of history, so they are already exact on the
+# chunk's rows. Only the RUNNING columns below (frames from UNBOUNDED
+# PRECEDING whose value is used undifferenced) need recombining, and
+# each needs only its kind:
+#   SUM            running sum/count: + (exclusive prefix of the earlier
+#                  chunks' totals) - (local value at the last context row)
+#   MAX/MIN        greatest/least with the earlier chunks' value
+#   FIRST/LAST     coalesce with the earlier chunks' first/last value
+#   (CARRY, run)   last(when(_sb == 1, run - x)): shifts with ``run``'s
+#                  SUM offset; with no local boundary, the earlier carry
+#   (SMAX, key)    max(struct(key, x)) with a SUM key: shift the key,
+#                  then greatest with the earlier chunks' struct
+# A context suffix's oldest row lacks its lag-1 predecessor; every kind
+# is exact regardless (its contribution cancels in a SUM offset, and a
+# NULL lag only ever hides a value that the earlier chunks carry).
+SUM, MAX, MIN, FIRST, LAST, CARRY, SMAX = (
+    "sum", "max", "min", "first", "last", "carry", "smax"
+)
+_BASE_STITCH = {
+    "_rn": SUM,
+    "tool_backfill": LAST,
+    **{f"cum_count_{r}": SUM for r in ROLES},
+    "session_id": SUM,
+    "_tis_carry": (CARRY, "_rn"),
+}
+_WIDE_STITCH = {
+    "cum_text_len": SUM,
+    "_ctl2": SUM,
+    "cum_tool_set": SUM,
+    "cum_empty_text": SUM,
+    "cum_long_text": SUM,
+    "high_gap_count_run": SUM,
+    "_active_us": SUM,
+    "cum_role_changes": SUM,
+    "_ctrap": SUM,
+    "_ctrapn": SUM,
+    "run_max_text_len": MAX,
+    "gap_max_run": MAX,
+    "run_min_text_len": MIN,
+    "conv_first_text_len": FIRST,
+    "_first_us": FIRST,
+    "_bnd_us": LAST,
+    "_sess_carry": (CARRY, "cum_text_len"),
+    "_s2carry": (CARRY, "_ctl2"),
+    "_trapcarry": (CARRY, "_ctrap"),
+    "_trapncarry": (CARRY, "_ctrapn"),
+    "_sess_max": (SMAX, "session_id"),
+    "_sess_min": (SMAX, "session_id"),
+    "_sgap": (SMAX, "session_id"),
+}
 
-def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFrame:
-    """The wide feature tier, computed in DEPENDENCY LAYERS: each layer
+
+def plan_lookback(wide: bool) -> tuple[int, int]:
+    """(rows, microseconds) of history the plan's bounded columns read
+    behind a row. Wide: the 20-row rolls reach 19 rows back (lag7 and
+    the 10-row gap rolls, whose oldest gap needs its predecessor, reach
+    fewer) and the widest range frame is 3600 s."""
+    if wide:
+        return WIDE_ROLL20 - 1, WIDE_RATE_MAX_S * 1_000_000
+    return ROLL_ROWS - 1, RATE_WINDOW_S * 1_000_000
+
+
+def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
+    """The wide tier's window columns, in DEPENDENCY LAYERS: each layer
     is one projection of mutually independent window expressions, so
     Catalyst extracts the whole layer into a single WindowExec pass
     (one row-copy per layer instead of one per column). Layers:
 
-    - **W0** — every window over raw/base-staged columns (lags, all
-      roll frames, cumulative sums/extremes, boundary carries that only
-      read base columns). One node, ~45 expressions.
-    - locals — row-wise derivations of W0 outputs (no window).
-    - **W1** — windows over W0-derived columns (session text-len carry,
-      role-change sums, the wing trapezoid integral). One node.
-    - **SESS** — the (conv_id, session_id) family: partitioning by a
-      superset of the exchange key reuses the conv_id hash exchange
-      (subset rule) and costs one in-partition sort, never a shuffle.
     - **RANGE** — every rangeBetween frame, ordered by the ONE staged
       ``_usq`` column so the whole family shares a single us-Sort (a
       fresh unix_micros projection per window would give each frame its
-      own sort key). The caller appends ``rate_60s`` to this node.
-    - final locals — :func:`wide_local_exprs` + calendar/derived cols.
+      own sort key). Merges with the caller's ``rate_60s`` node.
+    - **W0** — every window over raw/base-staged columns (lags, the
+      5-row frames, cumulative sums/extremes, the boundary timestamp).
+    - **W1** — windows over W0-derived columns (role-change sums, the
+      wing trapezoid integral, rolling sums as lag differences, block
+      min/max) and the (conv, session) family as struct-max/carry forms
+      over the same cumulative frame, so the family costs no extra pass.
 
-    Same single exchange as the base tier; running mean/std (zscore)
-    come from exact int64 cumulative sums so the expr, salted and
-    grouped paths produce bit-identical doubles. Requires ``_sb``,
-    ``_rn``, ``_gap_us`` staged by :func:`featurize_expr`.
+    Row-wise derivations are left to :func:`_wide_derived`, after the
+    stitch point. Requires ``_sb``, ``_rn``, ``_gap_us`` from the base
+    layers.
     """
-    def _rl(r: str) -> Column:
-        # registry literal in whatever shape `role` currently has:
-        # plain string, or its constant-folded 64-bit code
-        return enum_code_lit(r) if enum_shuffle else F.lit(r)
-
-    w5 = w.rowsBetween(-(roll_rows - 1), Window.currentRow)
+    w5 = w.rowsBetween(-(ROLL_ROWS - 1), Window.currentRow)
     w10 = w.rowsBetween(-(WIDE_ROLL10 - 1), Window.currentRow)
-    w20 = w.rowsBetween(-(WIDE_ROLL20 - 1), Window.currentRow)
     w4a = w.rowsBetween(-1, 0)
     w4b = w.rowsBetween(-4, -3)
     wtrap = w.rowsBetween(-3, 0)
-    usq = F.col("_usq")
     tl = F.col("text_len")
     tll = tl.cast("long")
     gap = F.col("lag1_ts_gap_s")
     rn = F.col("_rn")
-    # 10/20-row min/max block decomposition applies only when the
-    # frames tile exactly into >=2 base-width (roll_rows) blocks
-    _tiles = (
-        WIDE_ROLL10 % roll_rows == 0
-        and WIDE_ROLL10 // roll_rows >= 2
-        and WIDE_ROLL20 % roll_rows == 0
-    )
-    # identical window expressions within one projection are
-    # deduplicated by Catalyst, so compound formulas (zscore from cum
-    # sums, session_elapsed from the boundary carry) stay in-layer.
-    cum_tl = F.sum(tl).over(wcum).cast("long")
-    ctl2 = F.sum(tll * tll).over(wcum).cast("long")
-    m_run = cum_tl / rn
-    var_run = ctl2 / rn - m_run * m_run
-    sb_us = F.when(gap > gap_s, us)
-    # us is non-decreasing within a conversation, so first == min and
-    # the unordered partition-only window (its own WindowExec) is not
-    # needed
-    first_us = F.first(us).over(wcum)
-    start = F.coalesce(F.last(sb_us, ignorenulls=True).over(wcum), first_us)
-    run_max = F.max(tl).over(wcum).cast("int")
-    run_min = F.min(tl).over(wcum).cast("int")
-    act_us = F.coalesce(F.sum("_gap_us").over(wcum), F.lit(0)).cast("long")
 
     # ---- RANGE first: every rangeBetween frame while the row is
     # narrow (merges with the caller's rate_60s node — same spec,
@@ -516,22 +550,15 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
     # exactly. Counts are ints and the sums are int64 over int text_len
     # — both differences are bit-identical to the sliding originals
     # (empty "before" frame: count 0, sum NULL → coalesce 0).
-    def _wgrow(upper_us: int):
-        return (
-            Window.partitionBy("conv_id")
-            .orderBy(usq)
-            .rangeBetween(Window.unboundedPreceding, upper_us)
-        )
-
-    cnt_le = F.count(F.lit(1)).over(_wgrow(0))
-    sum_le = F.sum(tl).over(_wgrow(0))
+    cnt_le = F.count(F.lit(1)).over(wgrow(0))
+    sum_le = F.sum(tl).over(wgrow(0))
 
     def _rate(sec: int) -> Column:
-        before = F.count(F.lit(1)).over(_wgrow(-sec * 1_000_000 - 1))
+        before = F.count(F.lit(1)).over(wgrow(-sec * 1_000_000 - 1))
         return (cnt_le - before).cast("double")
 
     def _tsum(sec: int) -> Column:
-        before = F.sum(tl).over(_wgrow(-sec * 1_000_000 - 1))
+        before = F.sum(tl).over(wgrow(-sec * 1_000_000 - 1))
         return (sum_le - F.coalesce(before, F.lit(0))).cast("long")
 
     df = df.withColumns(
@@ -553,7 +580,8 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
             "_lag2_tll": F.lag(tll, 2).over(w),
             "prev_role": F.lag("role").over(w),
             "_prev_tool": F.lag("tool").over(w),
-            "cum_text_len": cum_tl,
+            "cum_text_len": F.sum(tl).over(wcum).cast("long"),
+            "_ctl2": F.sum(tll * tll).over(wcum).cast("long"),
             "lag2_text_len_delta": (tl - F.lag(tl, 2).over(w)).cast("double"),
             "lag3_text_len_delta": (tl - F.lag(tl, 3).over(w)).cast("double"),
             "lag4_text_len_delta": (tl - F.lag(tl, 4).over(w)).cast("double"),
@@ -563,36 +591,22 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
             "lag2_ts_gap_s": (us - F.lag(us, 2).over(w)).cast("double") / F.lit(1e6),
             "lag3_ts_gap_s": (us - F.lag(us, 3).over(w)).cast("double") / F.lit(1e6),
             # only the base-width min/max frames are evaluated as
-            # sliding frames; when the 10/20-row frames tile exactly
-            # into base-width blocks (the default roll_rows=5 does),
-            # they are EXACT block compositions computed in W1: max
-            # over [t-19, t] = greatest of the 5-row block maxima at
-            # lags 0/5/10/15 (at partition heads the early blocks
-            # already cover [1, t] and missing lags are NULL, which
-            # greatest/least skip — identical to the frame max).
-            # Comparisons, not sums, so this is exact for any type.
-            # Non-tiling roll_rows falls back to sliding frames below.
+            # sliding frames; the 10/20-row frames tile exactly into
+            # base-width blocks and are EXACT block compositions
+            # computed in W1: max over [t-19, t] = greatest of the 5-row
+            # block maxima at lags 0/5/10/15 (at partition heads the
+            # early blocks already cover [1, t] and missing lags are
+            # NULL, which greatest/least skip — identical to the frame
+            # max). Comparisons, not sums, so this is exact for any type.
             "roll_max_text_len_5": F.max(tl).over(w5).cast("double"),
             "roll_min_text_len_5": F.min(tl).over(w5).cast("double"),
             "gap_roll_max_5": F.max(gap).over(w5),
             "gap_roll_min_5": F.min(gap).over(w5),
-            **(
-                {}
-                if _tiles
-                else {
-                    "roll_min_text_len_10": F.min(tl).over(w10).cast("double"),
-                    "roll_max_text_len_10": F.max(tl).over(w10).cast("double"),
-                    "roll_min_text_len_20": F.min(tl).over(w20).cast("double"),
-                    "roll_max_text_len_20": F.max(tl).over(w20).cast("double"),
-                    "gap_roll_max_10": F.max(gap).over(w10),
-                    "gap_roll_min_10": F.min(gap).over(w10),
-                }
-            ),
             "wing_asym_5": (F.sum(tll).over(w4a) - F.sum(tll).over(w4b)).cast(
                 "double"
             ),
-            "run_max_text_len": run_max,
-            "run_min_text_len": run_min,
+            "run_max_text_len": F.max(tl).over(wcum).cast("int"),
+            "run_min_text_len": F.min(tl).over(wcum).cast("int"),
             "conv_first_text_len": F.first(tl).over(wcum).cast("int"),
             "cum_tool_set": F.sum(F.col("tool").isNotNull().cast("int"))
             .over(wcum)
@@ -603,24 +617,18 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
             "high_gap_count_run": F.sum(F.when(gap > 3600, 1).otherwise(0))
             .over(wcum)
             .cast("long"),
-            "_active_us": act_us,
-            "text_len_zscore_run": F.when(
-                var_run > 0, (tll - m_run) / F.sqrt(var_run)
-            ).otherwise(F.lit(0.0)),
-            "run_std_text_len": F.sqrt(F.greatest(F.lit(0.0), var_run)),
-            "_ctl2": ctl2,
-            "session_elapsed_s": (us - start).cast("double") / F.lit(1e6),
-            "sess_start_hour": F.hour(F.timestamp_micros(start.cast("long"))).cast(
-                "int"
-            ),
-            "time_since_start_s": (us - first_us).cast("double") / F.lit(1e6),
-            "days_since_start": F.floor((us - first_us) / F.lit(86_400_000_000)).cast(
+            "_active_us": F.coalesce(F.sum("_gap_us").over(wcum), F.lit(0)).cast(
                 "long"
             ),
+            # us is non-decreasing within a conversation, so first ==
+            # min and the unordered partition-only window (its own
+            # WindowExec) is not needed
+            "_first_us": F.first(us).over(wcum),
+            "_bnd_us": F.last(F.when(gap > gap_s, us), ignorenulls=True).over(wcum),
         }
     )
 
-    # ---- locals over W0 outputs (no window) ----
+    # ---- row-wise inputs of W1 (no window) ----
     gl = F.least(F.col("_gap_us"), F.lit(3_600_000_000))
     gms_cap = ((gl - gl % 1000) / 1000).cast("long")
     gms_sess = ((F.col("_gap_us") - F.col("_gap_us") % 1000) / 1000).cast("long")
@@ -630,11 +638,6 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
             "role_changed": (~F.col("role").eqNullSafe(F.col("prev_role"))).cast(
                 "int"
             ),
-            "tool_changed": (~F.col("tool").eqNullSafe(F.col("_prev_tool"))).cast(
-                "int"
-            ),
-            "accel_text_len": (tll - 2 * lag_tll + F.col("_lag2_tll")).cast("double"),
-            "pct_change_text_len": F.when(lag_tll > 0, (tl - lag_tll) / lag_tll),
             # trapezoid areas in exact integers: (len_i + len_{i-1}) ×
             # the gap floored to whole ms (floor via % is exact long
             # arithmetic both engines). The wing trap caps the gap at
@@ -647,44 +650,6 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
                 (F.col("_sb") == 0) & F.col("_gap_us").isNotNull(),
                 (tll + lag_tll) * gms_sess,
             ),
-            "gap_roll_range_5": F.col("gap_roll_max_5") - F.col("gap_roll_min_5"),
-            "turn_idx_conv": rn.cast("int"),
-            "text_len_vs_first": (tl - F.col("conv_first_text_len")).cast("int"),
-            "run_depth_text_len": (
-                F.col("run_max_text_len") - F.col("run_min_text_len")
-            ).cast("int"),
-            "text_len_range_norm": F.when(
-                F.col("run_max_text_len") - F.col("run_min_text_len") > 0,
-                (tl - F.col("run_min_text_len")).cast("double")
-                / (F.col("run_max_text_len") - F.col("run_min_text_len")),
-            ),
-            "active_time_run_s": F.col("_active_us").cast("double") / F.lit(1e6),
-            "is_session_start": (F.col("turn_in_session") == 1).cast("int"),
-        }
-    )
-    df = df.withColumns(
-        {
-            "pct_assistant_so_far": F.col("cum_count_assistant").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_tool_so_far": F.col("cum_count_tool").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_user_so_far": F.col("cum_count_user").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_system_so_far": F.col("cum_count_system").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_tool_set_so_far": F.col("cum_tool_set").cast("double")
-            / F.col("turn_idx_conv"),
-            "cum_mean_text_len": F.col("cum_text_len") / F.col("turn_idx_conv"),
-            "mean_gap_run": F.when(
-                F.col("turn_idx_conv") > 1,
-                (F.col("_active_us") / (F.col("turn_idx_conv") - 1)) / F.lit(1e6),
-            ),
-            "turn_rate_session": F.col("turn_in_session").cast("double")
-            / (F.col("session_elapsed_s") + F.lit(1.0)),
-            "turn_rate_conv": F.col("turn_idx_conv").cast("double")
-            / (F.col("time_since_start_s") + F.lit(1.0)),
-            "sess_frac_of_turns": F.col("turn_in_session").cast("double")
-            / F.col("turn_idx_conv"),
         }
     )
 
@@ -699,70 +664,70 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
     # counters. All sums are exact int64 (and Average's double
     # accumulation over small ints is exact), so sum, sum/count and the
     # moment formulas are bit-identical to the sliding originals.
-    # min/max cannot be expressed as differences and stay sliding in W0.
+    # min/max cannot be expressed as differences: 5-row blocks from W0.
     def _lagz(c: Column, k: int) -> Column:
         return F.coalesce(F.lag(c, k).over(w), F.lit(0))
 
-    cum_tl_c = F.col("cum_text_len")
-    ctl2_c = F.col("_ctl2")
-    act_c = F.col("_active_us")
-    n5 = F.least(rn, F.lit(roll_rows))
+    def _blocks(agg, c: str, width: int) -> Column:
+        return agg(
+            F.col(c),
+            *[F.lag(c, j * ROLL_ROWS).over(w) for j in range(1, width // ROLL_ROWS)],
+        )
+
+    cum_tl = F.col("cum_text_len")
+    ctl2 = F.col("_ctl2")
+    act = F.col("_active_us")
+    n5 = F.least(rn, F.lit(ROLL_ROWS))
     n10 = F.least(rn, F.lit(WIDE_ROLL10))
     n20 = F.least(rn, F.lit(WIDE_ROLL20))
-    s5 = cum_tl_c - _lagz(cum_tl_c, roll_rows)
-    s10 = cum_tl_c - _lagz(cum_tl_c, WIDE_ROLL10)
-    s20 = cum_tl_c - _lagz(cum_tl_c, WIDE_ROLL20)
+    s5 = cum_tl - _lagz(cum_tl, ROLL_ROWS)
+    s10 = cum_tl - _lagz(cum_tl, WIDE_ROLL10)
+    s20 = cum_tl - _lagz(cum_tl, WIDE_ROLL20)
     m5 = s5 / n5
     m10 = s10 / n10
     m20 = s20 / n20
-    m5_2 = (ctl2_c - _lagz(ctl2_c, roll_rows)) / n5
-    m10_2 = (ctl2_c - _lagz(ctl2_c, WIDE_ROLL10)) / n10
-    m20_2 = (ctl2_c - _lagz(ctl2_c, WIDE_ROLL20)) / n20
-    sess_carry = F.last(
-        F.when(F.col("_sb") == 1, F.col("cum_text_len") - tll), ignorenulls=True
-    ).over(wcum)
-    # the (conv, session) family's window inputs (see the SESS comment
-    # below): struct-max/carry forms over the SAME wcum frame, batched
-    # into this node so the family costs no extra pass
+    m5_2 = (ctl2 - _lagz(ctl2, ROLL_ROWS)) / n5
+    m10_2 = (ctl2 - _lagz(ctl2, WIDE_ROLL10)) / n10
+    m20_2 = (ctl2 - _lagz(ctl2, WIDE_ROLL20)) / n20
+    # the (conv, session) family WITHOUT its own WindowExec (round-6).
+    # A (conv, session) window costs a dedicated Sort + full buffer pass
+    # even though it reuses the exchange; every member of the family is
+    # instead expressed over the existing wcum frame (same technique
+    # q_feature_vector_wide uses natively):
+    # - max/min: lexicographic struct-max — session_id is nondecreasing
+    #   in (ts, turn_idx) order, so max(struct(session_id, x)) over the
+    #   conv prefix lands in the CURRENT session → within-session
+    #   running max of x (min via negation). Sentinel −1 stands in for
+    #   "no real gap yet" (gaps are >= 0; boundary rows and the rn=1
+    #   NULL-gap row map to −1, translated back to NULL at the end).
+    # - sums: cumulative minus its value carried at the last boundary
+    #   (the sess_cum_text_len trick), exact int64.
     sid = F.col("session_id")
-    _sgap_in = F.when(
-        (F.col("_sb") == 0) & gap.isNotNull(), gap
-    ).otherwise(F.lit(-1.0))
+    sb = F.col("_sb") == 1
+    sgap_in = F.when((F.col("_sb") == 0) & gap.isNotNull(), gap).otherwise(
+        F.lit(-1.0)
+    )
     ctrap = F.sum("_trap_s").over(wcum)
     ctrapn = F.count("_trap_s").over(wcum)
     df = df.withColumns(
         {
-            "sess_max_text_len": F.max(F.struct(sid.alias("s"), tl.alias("x")))
-            .over(wcum)
-            .getField("x")
-            .cast("int"),
-            "sess_min_text_len": (
-                -F.max(F.struct(sid.alias("s"), (-tl).alias("x")))
-                .over(wcum)
-                .getField("x")
-            ).cast("int"),
-            "_sgap": F.max(F.struct(sid.alias("s"), _sgap_in.alias("x")))
-            .over(wcum)
-            .getField("x"),
-            "_s2carry": F.last(
-                F.when(F.col("_sb") == 1, F.col("_ctl2") - tll * tll),
-                ignorenulls=True,
-            ).over(wcum),
+            "_sess_max": F.max(F.struct(sid.alias("s"), tl.alias("x"))).over(wcum),
+            "_sess_min": F.max(F.struct(sid.alias("s"), (-tl).alias("x"))).over(
+                wcum
+            ),
+            "_sgap": F.max(F.struct(sid.alias("s"), sgap_in.alias("x"))).over(wcum),
+            "_sess_carry": F.last(F.when(sb, cum_tl - tll), ignorenulls=True).over(
+                wcum
+            ),
+            "_s2carry": F.last(F.when(sb, ctl2 - tll * tll), ignorenulls=True).over(
+                wcum
+            ),
             "_ctrap": F.coalesce(ctrap, F.lit(0)),
             "_trapcarry": F.last(
-                F.when(F.col("_sb") == 1, F.coalesce(ctrap, F.lit(0))),
-                ignorenulls=True,
+                F.when(sb, F.coalesce(ctrap, F.lit(0))), ignorenulls=True
             ).over(wcum),
-            "_trapn_sess": ctrapn
-            - F.coalesce(
-                F.last(
-                    F.when(F.col("_sb") == 1, ctrapn), ignorenulls=True
-                ).over(wcum),
-                F.lit(0),
-            ),
-            "sess_cum_text_len": (
-                F.col("cum_text_len") - F.coalesce(sess_carry, F.lit(0))
-            ).cast("long"),
+            "_ctrapn": ctrapn,
+            "_trapncarry": F.last(F.when(sb, ctrapn), ignorenulls=True).over(wcum),
             "cum_role_changes": F.sum("role_changed").over(wcum).cast("long"),
             "roll_role_changes_10": F.sum("role_changed").over(w10).cast("long"),
             "wing_auc_4": F.sum("_trap_w").over(wtrap) / F.lit(2000.0),
@@ -798,109 +763,123 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
             # explicitly, which is the identical value.
             "gap_roll_mean_5": F.when(
                 rn > 1,
-                (act_c - _lagz(act_c, roll_rows))
-                / F.least(rn - 1, F.lit(roll_rows)),
+                (act - _lagz(act, ROLL_ROWS)) / F.least(rn - 1, F.lit(ROLL_ROWS)),
             )
             / F.lit(1e6),
             "gap_roll_mean_10": F.when(
                 rn > 1,
-                (act_c - _lagz(act_c, WIDE_ROLL10))
-                / F.least(rn - 1, F.lit(WIDE_ROLL10)),
+                (act - _lagz(act, WIDE_ROLL10)) / F.least(rn - 1, F.lit(WIDE_ROLL10)),
             )
             / F.lit(1e6),
-            # exact base-block compositions of the sliding minima/
-            # maxima staged in W0 (see the W0 comment): one lag per
-            # block instead of O(frame) updates per row
-            **(
-                {
-                    "roll_max_text_len_10": F.greatest(
-                        F.col("roll_max_text_len_5"),
-                        *[
-                            F.lag("roll_max_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                    "roll_min_text_len_10": F.least(
-                        F.col("roll_min_text_len_5"),
-                        *[
-                            F.lag("roll_min_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                    "roll_max_text_len_20": F.greatest(
-                        F.col("roll_max_text_len_5"),
-                        *[
-                            F.lag("roll_max_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL20 // roll_rows)
-                        ],
-                    ),
-                    "roll_min_text_len_20": F.least(
-                        F.col("roll_min_text_len_5"),
-                        *[
-                            F.lag("roll_min_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL20 // roll_rows)
-                        ],
-                    ),
-                    "gap_roll_max_10": F.greatest(
-                        F.col("gap_roll_max_5"),
-                        *[
-                            F.lag("gap_roll_max_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                    "gap_roll_min_10": F.least(
-                        F.col("gap_roll_min_5"),
-                        *[
-                            F.lag("gap_roll_min_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                }
-                if _tiles
-                else {}
-            ),
+            "roll_max_text_len_10": _blocks(F.greatest, "roll_max_text_len_5", WIDE_ROLL10),
+            "roll_min_text_len_10": _blocks(F.least, "roll_min_text_len_5", WIDE_ROLL10),
+            "roll_max_text_len_20": _blocks(F.greatest, "roll_max_text_len_5", WIDE_ROLL20),
+            "roll_min_text_len_20": _blocks(F.least, "roll_min_text_len_5", WIDE_ROLL20),
+            "gap_roll_max_10": _blocks(F.greatest, "gap_roll_max_5", WIDE_ROLL10),
+            "gap_roll_min_10": _blocks(F.least, "gap_roll_min_5", WIDE_ROLL10),
         }
     )
+    return df
+
+
+def _wide_derived(df, us, enum_shuffle) -> DataFrame:
+    """The wide tier's row-wise features over the (stitched) window
+    columns of :func:`_wide_windows`: no windows, so they are evaluated
+    once, after the stitch point. Running mean/std (zscore) come from
+    exact int64 cumulative sums so every path produces bit-identical
+    doubles."""
+    def _rl(r: str) -> Column:
+        # registry literal in whatever shape `role` currently has:
+        # plain string, or its constant-folded 64-bit code
+        return enum_code_lit(r) if enum_shuffle else F.lit(r)
+
+    tl = F.col("text_len")
+    tll = tl.cast("long")
+    rn = F.col("_rn")
+    lag_tll = F.col("_lag_tll")
+    m_run = F.col("cum_text_len") / rn
+    var_run = F.col("_ctl2") / rn - m_run * m_run
+    first_us = F.col("_first_us")
+    start = F.coalesce(F.col("_bnd_us"), first_us)
+    run_max = F.col("run_max_text_len")
+    run_min = F.col("run_min_text_len")
     df = df.withColumns(
         {
-            "sess_mean_text_len": F.col("sess_cum_text_len").cast("double")
-            / F.col("turn_in_session"),
+            "tool_changed": (~F.col("tool").eqNullSafe(F.col("_prev_tool"))).cast(
+                "int"
+            ),
+            "accel_text_len": (tll - 2 * lag_tll + F.col("_lag2_tll")).cast("double"),
+            "pct_change_text_len": F.when(lag_tll > 0, (tl - lag_tll) / lag_tll),
+            "gap_roll_range_5": F.col("gap_roll_max_5") - F.col("gap_roll_min_5"),
             "roll_range_text_len_10": F.col("roll_max_text_len_10")
             - F.col("roll_min_text_len_10"),
             "roll_range_text_len_20": F.col("roll_max_text_len_20")
             - F.col("roll_min_text_len_20"),
+            "turn_idx_conv": rn.cast("int"),
+            "text_len_vs_first": (tl - F.col("conv_first_text_len")).cast("int"),
+            "run_depth_text_len": (run_max - run_min).cast("int"),
+            "text_len_range_norm": F.when(
+                run_max - run_min > 0,
+                (tl - run_min).cast("double") / (run_max - run_min),
+            ),
+            "active_time_run_s": F.col("_active_us").cast("double") / F.lit(1e6),
+            "is_session_start": (F.col("turn_in_session") == 1).cast("int"),
+            "text_len_zscore_run": F.when(
+                var_run > 0, (tll - m_run) / F.sqrt(var_run)
+            ).otherwise(F.lit(0.0)),
+            "run_std_text_len": F.sqrt(F.greatest(F.lit(0.0), var_run)),
+            "session_elapsed_s": (us - start).cast("double") / F.lit(1e6),
+            "sess_start_hour": F.hour(F.timestamp_micros(start.cast("long"))).cast(
+                "int"
+            ),
+            "time_since_start_s": (us - first_us).cast("double") / F.lit(1e6),
+            "days_since_start": F.floor((us - first_us) / F.lit(86_400_000_000)).cast(
+                "long"
+            ),
+            "sess_cum_text_len": (
+                F.col("cum_text_len") - F.coalesce(F.col("_sess_carry"), F.lit(0))
+            ).cast("long"),
+            "sess_max_text_len": F.col("_sess_max").getField("x").cast("int"),
+            "sess_min_text_len": (-F.col("_sess_min").getField("x")).cast("int"),
         }
     )
-
-    # ---- SESS: the (conv_id, session_id) family WITHOUT its own
-    # WindowExec (round-6). A (conv, session) window costs a dedicated
-    # Sort + full buffer pass even though it reuses the exchange; every
-    # member of the family is instead expressed over the existing wcum
-    # frame (same technique q_feature_vector_wide uses natively):
-    # - max/min: lexicographic struct-max — session_id is nondecreasing
-    #   in (ts, turn_idx) order, so max(struct(session_id, x)) over the
-    #   conv prefix lands in the CURRENT session → within-session
-    #   running max of x (min via negation). Sentinel −1 stands in for
-    #   "no real gap yet" (gaps are >= 0; boundary rows and the rn=1
-    #   NULL-gap row map to −1, translated back to NULL at the end).
-    # - sums: cumulative minus its value carried at the last boundary
-    #   (the sess_cum_text_len trick), exact int64.
-    # Values are bit-identical to the (conv, session)-window originals
-    # (oracle/salted/enum parity suites).
+    tic = F.col("turn_idx_conv")
     tis = F.col("turn_in_session")
+    df = df.withColumns(
+        {
+            "pct_assistant_so_far": F.col("cum_count_assistant").cast("double") / tic,
+            "pct_tool_so_far": F.col("cum_count_tool").cast("double") / tic,
+            "pct_user_so_far": F.col("cum_count_user").cast("double") / tic,
+            "pct_system_so_far": F.col("cum_count_system").cast("double") / tic,
+            "pct_tool_set_so_far": F.col("cum_tool_set").cast("double") / tic,
+            "cum_mean_text_len": F.col("cum_text_len") / tic,
+            "mean_gap_run": F.when(
+                tic > 1, (F.col("_active_us") / (tic - 1)) / F.lit(1e6)
+            ),
+            "turn_rate_session": tis.cast("double")
+            / (F.col("session_elapsed_s") + F.lit(1.0)),
+            "turn_rate_conv": tic.cast("double")
+            / (F.col("time_since_start_s") + F.lit(1.0)),
+            "sess_frac_of_turns": tis.cast("double") / tic,
+            "sess_mean_text_len": F.col("sess_cum_text_len").cast("double") / tis,
+        }
+    )
+    # ---- the (conv, session) family's derived values
     sm = F.col("sess_mean_text_len")
+    sgap = F.col("_sgap").getField("x")
     sess_tlen2 = F.col("_ctl2") - F.coalesce(F.col("_s2carry"), F.lit(0))
+    trapn_sess = F.col("_ctrapn") - F.coalesce(F.col("_trapncarry"), F.lit(0))
     df = df.withColumns(
         {
             "sess_depth_text_len": (
                 F.col("sess_max_text_len") - F.col("sess_min_text_len")
             ).cast("int"),
-            "sess_gap_max_s": F.when(F.col("_sgap") >= 0, F.col("_sgap")),
+            "sess_gap_max_s": F.when(sgap >= 0, sgap),
             "sess_std_text_len": F.sqrt(
                 F.greatest(F.lit(0.0), sess_tlen2 / tis - sm * sm)
             ),
             "sess_auc_trapezoid": F.when(
-                F.col("_trapn_sess") > 0,
+                trapn_sess > 0,
                 F.col("_ctrap") - F.coalesce(F.col("_trapcarry"), F.lit(0)),
             )
             / F.lit(2000.0),
@@ -925,8 +904,7 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
             / F.lit(86_400_000_000.0),
         }
     )
-    df = df.withColumns(wide_local_exprs(enum_shuffle))
-    return df
+    return df.withColumns(wide_local_exprs(enum_shuffle))
 
 
 def sessionize(
@@ -948,88 +926,85 @@ def sessionize(
     )
 
 
-def featurize_expr(
+def stage_columns(
     df: DataFrame,
-    gap_s: float = SESSION_GAP_S,
-    rate_window_s: int = RATE_WINDOW_S,
-    roll_rows: int = ROLL_ROWS,
-    include_labels: bool = False,
     include_text: bool = True,
     wide: bool = False,
     enum_shuffle: bool = False,
-    decode_enums: bool = False,
 ) -> DataFrame:
-    """The full per-turn feature vector as ONE window-expression plan.
+    """Project a turns table to what :func:`feature_plan` reads, BELOW
+    any exchange: ``text_len`` from ``text``, and per contract
 
-    ``enum_shuffle=True`` (narrow ``include_text=False`` contract only)
-    replaces the ``role``/``tool`` strings with 64-bit hash codes BELOW
-    the exchange — the shuffle rows then carry no string except the
-    conv_id key. Features only need equality on these columns
-    (registry-literal comparisons use the code of the literal).
-
-    The feature-table contract KEEPS the codes in the output
-    (``role``/``tool``/``tool_backfill`` — and ``prev_role`` in the
-    wide tier — come back as BIGINT): strings are recovered lazily at
-    read time via :func:`enum_decode` with :func:`enum_decode_map`
-    against the source table (or the dims ``featurize_job`` writes
-    next to the feature table). Decoding inside this plan —
-    ``decode_enums=True``, bit-identical to the string path,
-    pytest-locked — costs one column-pruned distinct scan plus a
-    broadcast join per dim, which is pure overhead for consumers that
-    only ever compare these columns for equality (round-5 judge item:
-    the three decode dims were the measured local regression of the
-    enum trade).
-
-    Scale notes (100 TB): all windows below share
-    ``partitionBy(conv_id)`` — Catalyst plans a single hash exchange on
-    conv_id followed by one sort; every feature is computed in that one
-    pipelined stage. A mega-conversation lands in a single task: for
-    that case use :func:`astrospectro_spark.engine.skew.featurize_salted`,
-    which chunk-splits hot conversations with lookback overlap.
-
-    ``include_text=False`` projects ``text`` down to ``text_len``
-    BEFORE the exchange: the feature table is keyed by
-    (conv_id, turn_idx) and the raw text stays in the source table, so
-    the shuffle carries an int instead of the corpus — at 10^12 turns
-    this cuts shuffled bytes by roughly the mean turn length. This is
-    the production featurize-job default; the text-carrying variant
-    exists for pipelines that materialise a denormalised table.
+    - ``include_text=True``: every input column plus ``text_len``;
+    - ``include_text=False``: ``text`` dropped — the feature table is
+      keyed by (conv_id, turn_idx) and the raw text stays in the source
+      table, so the shuffle carries an int instead of the corpus;
+    - ``enum_shuffle=True`` (``include_text=False`` only): ``role`` and
+      ``tool`` as 64-bit codes, plus ``tool_len`` for the wide tier — a
+      row-local feature of the STRING, staged here because a code
+      carries no length.
     """
     if enum_shuffle and include_text:
         raise ValueError(
             "enum_shuffle supports the include_text=False feature-table "
             "contract only (the text-carrying variant keeps strings)"
         )
-    src = df
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    us = _ts_us("ts")
-
     text_len = F.length(F.coalesce(F.col("text"), F.lit(""))).cast("int")
     if include_text:
-        key_cols = KEY_COLS
-        df = df.withColumn("text_len", text_len)
-    elif enum_shuffle:
-        key_cols = [c for c in KEY_COLS if c != "text"]
-        # tool_len is a row-local wide feature of the STRING; staged
-        # below the exchange because a code carries no length
-        extra = (
-            [F.coalesce(F.length("tool"), F.lit(0)).cast("int").alias("tool_len")]
-            if wide
-            else []
+        return df.withColumn("text_len", text_len)
+    if not enum_shuffle:
+        return df.select(
+            *[c for c in KEY_COLS if c != "text"], text_len.alias("text_len")
         )
-        df = df.select(
-            "conv_id",
-            "turn_idx",
-            _enum_code("role").alias("role"),
-            _enum_code("tool").alias("tool"),
-            "ts",
-            text_len.alias("text_len"),
-            *extra,
+    extra = (
+        [F.coalesce(F.length("tool"), F.lit(0)).cast("int").alias("tool_len")]
+        if wide
+        else []
+    )
+    return df.select(
+        "conv_id",
+        "turn_idx",
+        _enum_code("role").alias("role"),
+        _enum_code("tool").alias("tool"),
+        "ts",
+        text_len.alias("text_len"),
+        *extra,
+    )
+
+
+def feature_plan(
+    df: DataFrame,
+    part: tuple[str, ...] = ("conv_id",),
+    gap_s: float = SESSION_GAP_S,
+    wide: bool = False,
+    enum_shuffle: bool = False,
+    include_labels: bool = False,
+    stitch=None,
+) -> DataFrame:
+    """Every feature, defined once: the window plan over
+    ``partitionBy(*part).orderBy(ts, turn_idx)`` of a
+    :func:`stage_columns` frame, then the row-wise derivations.
+
+    ``stitch(df, kinds)`` runs at the STITCH POINT, between the last
+    window layer and the derived features, with ``kinds`` mapping each
+    running column to its stitch kind (see ``_BASE_STITCH``). The
+    single-window plan (``part=("conv_id",)``) needs none — its stitch
+    point is the identity; the salted path passes
+    ``("conv_id", "_tgt")`` and its chunk stitch. Labels (lead-based)
+    read the partition's next row and are only valid unchunked.
+    """
+    w = Window.partitionBy(*part).orderBy("ts", "turn_idx")
+    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    def wgrow(upper_us: int):
+        return (
+            Window.partitionBy(*part)
+            .orderBy(F.col("_usq"))
+            .rangeBetween(Window.unboundedPreceding, upper_us)
         )
-    else:
-        key_cols = [c for c in KEY_COLS if c != "text"]
-        df = df.select(*key_cols, text_len.alias("text_len"))
+
+    us = _ts_us("ts")
+    key_cols = [c for c in KEY_COLS if c in df.columns]
     # ONE staged epoch-µs column for every rangeBetween frame: ordering
     # by the same physical column (not a fresh unix_micros projection
     # per window) lets Catalyst share a single us-Sort across the whole
@@ -1064,35 +1039,27 @@ def featurize_expr(
                 for r in ROLES
             },
             "roll_mean_text_len_5": F.avg("text_len").over(
-                w.rowsBetween(-(roll_rows - 1), Window.currentRow)
+                w.rowsBetween(-(ROLL_ROWS - 1), Window.currentRow)
             ),
         }
     )
-    # ---- layer 1: session ids + turn_in_session, ONE window pass.
-    # Both are wcum aggregates of W0 outputs and independent of each
-    # other, so they batch into a single WindowExec (round-6: they were
-    # two adjacent single-function Window nodes, i.e. two full buffer
-    # passes over every partition). turn_in_session avoids a second
-    # exchange: a (conv, session) partition would re-shuffle the whole
-    # table; instead count rows since the most recent session boundary
-    # inside the SAME window (rn - rn just before the last boundary).
+    # ---- layer 1: session ids + the turn_in_session carry, ONE window
+    # pass (both are wcum aggregates of W0 outputs and independent of
+    # each other). turn_in_session avoids a second exchange: a (conv,
+    # session) partition would re-shuffle the whole table; instead count
+    # rows since the most recent session boundary inside the SAME window
+    # (rn - rn just before the last boundary).
     df = df.withColumn(
         "_sb", F.when(F.col("lag1_ts_gap_s") > gap_s, 1).otherwise(0)
     )
     df = df.withColumns(
         {
             "session_id": F.sum("_sb").over(wcum).cast("int"),
-            "turn_in_session": (
-                F.col("_rn")
-                - F.coalesce(
-                    F.last(
-                        F.when(F.col("_sb") == 1, F.col("_rn") - 1), ignorenulls=True
-                    ).over(wcum),
-                    F.lit(0),
-                )
-            ).cast("int"),
+            "_tis_carry": F.last(
+                F.when(F.col("_sb") == 1, F.col("_rn") - 1), ignorenulls=True
+            ).over(wcum),
         }
-    )  # _sb/_rn/_gap_us stay staged: _wide_exprs consumes them
+    )
     # rolling turn-rate on the REAL time axis: count of turns with
     # ts in [t-60s, t] — a rangeBetween frame on integer microseconds.
     # Note: rows sharing this exact ts are included regardless of
@@ -1102,27 +1069,28 @@ def featurize_expr(
     # after the wide tier (the wide tier's own range batch merges into
     # this node — same partition/order spec, adjacent, independent).
     # growing-frame difference instead of a sliding [-60s, 0] frame —
-    # same O(1)/row trick as the wide range family (see _wide_exprs):
+    # same O(1)/row trick as the wide range family (see _wide_windows):
     # count in [t-60s, t] = count in (-inf, t] - count in (-inf, t-60s)
-    wrange_le = (
-        Window.partitionBy("conv_id")
-        .orderBy(F.col("_usq"))
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    wrange_bef = (
-        Window.partitionBy("conv_id")
-        .orderBy(F.col("_usq"))
-        .rangeBetween(Window.unboundedPreceding, -rate_window_s * 1_000_000 - 1)
-    )
     df = df.withColumn(
         "rate_60s",
         (
-            F.count(F.lit(1)).over(wrange_le) - F.count(F.lit(1)).over(wrange_bef)
+            F.count(F.lit(1)).over(wgrow(0))
+            - F.count(F.lit(1)).over(wgrow(-RATE_WINDOW_S * 1_000_000 - 1))
         ).cast("double"),
+    )
+    kinds = dict(_BASE_STITCH)
+    if wide:
+        df = _wide_windows(df, w, wcum, wgrow, us, gap_s)
+        kinds.update(_WIDE_STITCH)
+    if stitch is not None:
+        df = stitch(df, kinds)
+    df = df.withColumn(
+        "turn_in_session",
+        (F.col("_rn") - F.coalesce(F.col("_tis_carry"), F.lit(0))).cast("int"),
     )
     cols = key_cols + FEATURE_COLS
     if wide:
-        df = _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle)
+        df = _wide_derived(df, us, enum_shuffle)
         cols = cols + WIDE_FEATURE_COLS
     if include_labels:
         df = df.withColumn(
@@ -1132,9 +1100,64 @@ def featurize_expr(
             (F.lead(us).over(w) - us).cast("double") / F.lit(1e6),
         )
         cols = cols + LABEL_COLS
-    out = df.select(*cols)
+    return df.select(*cols)
+
+
+def featurize_expr(
+    df: DataFrame,
+    gap_s: float = SESSION_GAP_S,
+    include_labels: bool = False,
+    include_text: bool = True,
+    wide: bool = False,
+    enum_shuffle: bool = False,
+    decode_enums: bool = False,
+) -> DataFrame:
+    """The full per-turn feature vector as ONE window-expression plan:
+    :func:`stage_columns` then :func:`feature_plan` over ``conv_id``.
+
+    ``enum_shuffle=True`` (narrow ``include_text=False`` contract only)
+    replaces the ``role``/``tool`` strings with 64-bit hash codes BELOW
+    the exchange — the shuffle rows then carry no string except the
+    conv_id key. Features only need equality on these columns
+    (registry-literal comparisons use the code of the literal).
+
+    The feature-table contract KEEPS the codes in the output
+    (``role``/``tool``/``tool_backfill`` — and ``prev_role`` in the
+    wide tier — come back as BIGINT): strings are recovered lazily at
+    read time via :func:`enum_decode` with :func:`enum_decode_map`
+    against the source table (or the dims ``featurize_job`` writes
+    next to the feature table). Decoding inside this plan —
+    ``decode_enums=True``, bit-identical to the string path,
+    pytest-locked — costs one column-pruned distinct scan plus a
+    broadcast join per dim, which is pure overhead for consumers that
+    only ever compare these columns for equality (round-5 judge item:
+    the three decode dims were the measured local regression of the
+    enum trade).
+
+    Scale notes (100 TB): all windows share ``partitionBy(conv_id)`` —
+    Catalyst plans a single hash exchange on conv_id followed by one
+    sort; every feature is computed in that one pipelined stage. A
+    mega-conversation lands in a single task: for that case use
+    :func:`astrospectro_spark.engine.skew.featurize_salted`, which runs
+    this same :func:`feature_plan` per ts-range chunk of the hot
+    conversations (plus copied lookback rows) and recombines the running
+    columns at the plan's stitch point, one rule per stitch kind.
+
+    ``include_text=False`` projects ``text`` down to ``text_len``
+    BEFORE the exchange: at 10^12 turns this cuts shuffled bytes by
+    roughly the mean turn length. This is the production featurize-job
+    default; the text-carrying variant exists for pipelines that
+    materialise a denormalised table.
+    """
+    out = feature_plan(
+        stage_columns(df, include_text, wide, enum_shuffle),
+        gap_s=gap_s,
+        wide=wide,
+        enum_shuffle=enum_shuffle,
+        include_labels=include_labels,
+    )
     if enum_shuffle and decode_enums:
-        out = enum_decode(out, src, enum_decode_map(wide)).select(*cols)
+        out = enum_decode(out, df, enum_decode_map(wide)).select(out.columns)
     return out
 
 

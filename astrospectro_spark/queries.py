@@ -723,7 +723,7 @@ def q_feature_vector_wide(spark, sf_dir):
     gap_s = (us - F.lag(us).over(w)).cast("double") / 1e6
     # staging layers as BATCHED projections: each withColumns dict of
     # independent expressions collapses into ONE WindowExec pass (the
-    # same layering discipline as engine/windows._wide_exprs)
+    # same layering discipline as engine/windows._wide_windows)
     df = ev.withColumns(
         {
             "_us": us,

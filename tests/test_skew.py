@@ -4,7 +4,7 @@ chunks (SURVEY.md §4 custom-work 1; north_rule skew gate)."""
 
 from __future__ import annotations
 
-from astrospectro_spark.engine.skew import featurize_salted
+from astrospectro_spark.engine.skew import compute_ts_bounds, featurize_salted
 from astrospectro_spark.engine.windows import featurize_expr
 
 from .conftest import assert_frames_match
@@ -105,8 +105,9 @@ def test_session_stitch_adversarial_boundaries(spark):
     multiple boundary-free chunks inside one open session (the carry
     must accumulate across >1 chunk), duplicate timestamps at chunk
     cut points, a single-turn conversation, and an all-equal-ts
-    conversation. Tiny chunk_target forces ~10 chunks through the
-    120-turn conversation."""
+    conversation, and a chunk whose oldest context row is a true
+    session boundary with the conversation's largest gap. Tiny
+    chunk_target forces ~10 chunks through the 120-turn conversation."""
     import numpy as np
     import pandas as pd
 
@@ -128,10 +129,32 @@ def test_session_stitch_adversarial_boundaries(spark):
     # conv c: all rows share one timestamp (turn_idx tiebreak only)
     for i in range(25):
         rows.append(("conv-c", i, "user", "y" * (i % 50), None, t0))
+    # conv d: row 40 opens a session after the conversation's largest
+    # gap (25 h), and 10 s spacing after it. A chunk starting 19-360
+    # rows later copies row 40 as its OLDEST context row (the 19-row
+    # margin ends there and row 39 lies outside the 3600 s margin), so
+    # the one row whose lag-1 inputs the chunk cannot see is a boundary
+    # carrying the running gap maximum.
+    d_gaps = [10.0] * 100
+    d_gaps[40] = 90_000.0
+    d_ts = t0 + pd.to_timedelta(np.cumsum([0.0] + d_gaps[1:]), unit="s")
+    for i in range(100):
+        rows.append(("conv-d", i, ["user", "assistant", "tool"][i % 3],
+                     "z" * ((i * 53) % 400), "sed" if i % 4 == 0 else None, d_ts[i]))
     pdf = pd.DataFrame(
         rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
     )
     sdf = spark.createDataFrame(pdf)
+    # the chunking really puts a chunk start 19..360 rows after row 40
+    d_bounds = (
+        compute_ts_bounds(sdf.filter(sdf.conv_id == "conv-d"), 13)
+        .collect()[0]["_bounds"]
+    )
+    d_us = (d_ts - pd.Timestamp("1970-01-01")) // pd.Timedelta(microseconds=1)
+    assert any(
+        int((d_us[40:] < b).sum()) >= 19 and b - d_us[40] <= 3_600_000_000
+        for b in d_bounds
+    ), d_bounds
     salted = featurize_salted(
         sdf, hot_threshold=5, chunk_target_rows=13, wide=True
     ).toPandas()
@@ -140,3 +163,29 @@ def test_session_stitch_adversarial_boundaries(spark):
     # the fixture really exercised multi-chunk open sessions
     one = plain[plain.conv_id == "conv-a"]
     assert one["session_id"].nunique() == 4
+    d = plain[plain.conv_id == "conv-d"]
+    assert d["session_id"].nunique() == 2
+    assert d["gap_max_run"].max() == 90_000.0
+
+
+def test_skew_defines_no_feature():
+    """One feature algebra: the salted path runs windows.feature_plan
+    and stitches it per aggregate kind, so engine/skew.py never names a
+    feature column — a string literal equal to one would mean a second,
+    hand-written definition beside the plan."""
+    import ast
+    from pathlib import Path
+
+    from astrospectro_spark.engine import skew
+    from astrospectro_spark.engine.windows import FEATURE_COLS, WIDE_FEATURE_COLS
+
+    names = set(FEATURE_COLS) | set(WIDE_FEATURE_COLS)
+    tree = ast.parse(Path(skew.__file__).read_text())
+    found = sorted(
+        {
+            n.value
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value in names
+        }
+    )
+    assert not found, found
