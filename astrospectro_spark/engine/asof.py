@@ -5,7 +5,7 @@ Graft analogue of the reference's Gaia nearest-neighbour cross-match
 src/tools/gaia_crossmatcher.py:712-744) and the line↔peak tolerance
 association (reference: src/pipeline/peak_detector.py:137-181).
 
-Two implementations, same semantics:
+Three entry points, same semantics, two plans:
 
 1. :func:`asof_join` — the scale path. A sorted-merge as-of expressed
    as pure DataFrame ops: union turns+anchors, ONE hash exchange on
@@ -15,7 +15,13 @@ Two implementations, same semantics:
    one shuffle of (turns+anchors) — at 100 TB this beats any
    range-join (no row explosion) and any grouped UDF (no Arrow hop).
 
-2. :func:`asof_join_grouped` — the ``pd.merge_asof`` path the
+2. :func:`asof_join_salted` — the same plan, run per ts-range chunk
+   of the hot conversations (partitioned by ``(conv_id, chunk)``).
+   No state crosses chunks: every chunk boundary is a real turn
+   timestamp, so an anchor's latest turn at or before ``anchor_ts``
+   is always in the anchor's own chunk.
+
+3. :func:`asof_join_grouped` — the ``pd.merge_asof`` path the
    north_star names: ``cogroup(...).applyInPandas``. Kept as the
    reference semantics cross-check and for per-group kernels that
    genuinely need pandas.
@@ -30,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from astrospectro_spark.engine.skew import chunk_of, compute_ts_bounds, split_hot
 
 DEFAULT_VALUE_COLS = ["turn_idx", "role", "text", "tool", "ts"]
 
@@ -51,30 +59,40 @@ def asof_join(
     ``_is_anchor`` sorts anchors AFTER turns with equal ts, which makes
     the boundary ``ts == anchor_ts`` inclusive by construction.
     """
+    return _asof_plan(
+        turns, anchors, (entity_col,), turn_ts, anchor_ts, value_cols, tolerance_col,
+        tiebreak_col,
+    )
+
+
+def _asof_plan(
+    turns, anchors, part, turn_ts, anchor_ts, value_cols, tolerance_col, tiebreak_col
+) -> DataFrame:
+    """The as-of plan over ``partitionBy(*part)``: ``part[0]`` is the
+    entity, any further column (the chunk id) is dropped from the output."""
     value_cols = value_cols or DEFAULT_VALUE_COLS
-    anchor_payload = [c for c in anchors.columns if c != entity_col]
+    entity_col = part[0]
+    anchor_payload = [c for c in anchors.columns if c not in part]
 
     t = turns.select(
-        F.col(entity_col),
+        *[F.col(c) for c in part],
         F.col(turn_ts).alias("_ts"),
         F.lit(0).alias("_is_anchor"),
         F.col(tiebreak_col).cast("long").alias("_tie"),
         F.struct(*[F.col(c).alias(f"asof_{c}") for c in value_cols]).alias("_carry"),
     )
     a = anchors.select(
-        F.col(entity_col),
+        *[F.col(c) for c in part],
         F.col(anchor_ts).alias("_ts"),
         F.lit(1).alias("_is_anchor"),
         F.lit(None).cast("long").alias("_tie"),
-        F.lit(None)
-        .cast(t.schema["_carry"].dataType)
-        .alias("_carry"),
+        F.lit(None).cast(t.schema["_carry"].dataType).alias("_carry"),
         *[F.col(c) for c in anchor_payload],
     )
     u = t.unionByName(a, allowMissingColumns=True)
 
     w = (
-        Window.partitionBy(entity_col)
+        Window.partitionBy(*part)
         .orderBy(F.col("_ts").asc(), F.col("_is_anchor").asc(), F.col("_tie").asc_nulls_last())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -119,117 +137,28 @@ def asof_join_salted(
     hot_threshold: int = 2_000_000,
     chunk_target_rows: int = 500_000,
 ) -> DataFrame:
-    """:func:`asof_join` semantics with mega-conversation salting.
+    """:func:`asof_join` semantics with mega-conversation salting: hot
+    conversations are ts-range chunked (:func:`engine.skew.chunk_of`,
+    turns on ts and anchors on anchor_ts against the same boundaries)
+    and :func:`asof_join`'s plan runs over ``(entity, chunk)``: k tasks
+    instead of one, identical results, no state crossing chunks."""
+    (cold_t, hot_t), (cold_a, hot_a) = split_hot(
+        turns, hot_threshold, turns, anchors, entity_col=entity_col
+    )
+    args = (turn_ts, anchor_ts, value_cols, tolerance_col, tiebreak_col)
+    cold_out = _asof_plan(cold_t, cold_a, (entity_col,), *args)
 
-    A hot conversation otherwise sorts in ONE window task. Here hot
-    conversations are ts-range chunked (same boundaries for turns and
-    anchors), and each chunk is SEEDED with one synthetic context row:
-    the latest turn from all earlier chunks (a per-chunk summary +
-    exclusive running-last over the tiny summary table). Within a
-    chunk the ordinary carry then sees the true predecessor of its
-    first anchor, so results are identical to the unsalted join —
-    asserted in tests — while the hot conversation runs as k tasks.
-    """
-    from astrospectro_spark.engine.skew import chunk_of, compute_ts_bounds
-
-    value_cols = value_cols or DEFAULT_VALUE_COLS
-    census = turns.groupBy(entity_col).agg(F.count(F.lit(1)).alias("_n"))
-    hot_ids = census.filter(F.col("_n") > hot_threshold).select(entity_col)
-
-    cold_out = asof_join(
-        turns.join(F.broadcast(hot_ids), entity_col, "left_anti"),
-        anchors.join(F.broadcast(hot_ids), entity_col, "left_anti"),
-        entity_col, turn_ts, anchor_ts, value_cols, tolerance_col, tiebreak_col,
+    # Every bound is a real turn ts (compute_ts_bounds), so chunk t >= 1
+    # holds the turn at its lower bound b_t, and an anchor in chunk t has
+    # anchor_ts >= b_t: its latest turn at or before anchor_ts is in its
+    # own chunk, and the per-chunk carry is the global one.
+    bounds = F.broadcast(
+        compute_ts_bounds(hot_t, chunk_target_rows, ts_col=turn_ts, entity_col=entity_col)
     )
-
-    t_hot = turns.join(F.broadcast(hot_ids), entity_col, "left_semi")
-    a_hot = anchors.join(F.broadcast(hot_ids), entity_col, "left_semi")
-    bounds = compute_ts_bounds(
-        t_hot, chunk_target_rows, ts_col=turn_ts, entity_col=entity_col
-    )
-    t = t_hot.join(F.broadcast(bounds), entity_col).withColumn(
-        "_tgt", chunk_of(turn_ts)
-    )
-    a = (
-        a_hot.withColumn(turn_ts, F.col(anchor_ts))
-        .join(F.broadcast(bounds), entity_col)
-        .withColumn("_tgt", chunk_of(turn_ts))
-        .drop(turn_ts)
-    )
-
-    # per-chunk latest turn → exclusive running-last → one seed row per
-    # later chunk (the "state handoff" between chunks)
-    turn_struct = F.struct(
-        F.col(turn_ts).alias("_sts"),
-        F.col(tiebreak_col).cast("long").alias("_stie"),
-        *[F.col(c).alias(f"v_{c}") for c in value_cols],
-    )
-    summ = t.groupBy(entity_col, "_tgt").agg(
-        F.max_by(turn_struct, F.struct(F.col(turn_ts), F.col(tiebreak_col))).alias("_last")
-    )
-    # every chunk id that holds anchors or turns, each joined with the
-    # latest turn of any EARLIER chunk (anchor-only chunks contribute a
-    # null _last and inherit the running carry)
-    all_chunks = (
-        a.select(entity_col, "_tgt")
-        .unionByName(summ.select(entity_col, "_tgt"))
-        .distinct()
-        .join(summ, [entity_col, "_tgt"], "left")
-    )
-    wprev = (
-        Window.partitionBy(entity_col)
-        .orderBy("_tgt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = all_chunks.withColumn("_seed", F.last("_last", ignorenulls=True).over(wprev))
-    seeds = carry.filter(F.col("_seed").isNotNull()).select(
-        F.col(entity_col),
-        F.col("_tgt"),
-        F.col("_seed").getField("_sts").alias(turn_ts),
-        F.col("_seed").getField("_stie").cast("int").alias(tiebreak_col),
-        *[
-            F.col("_seed").getField(f"v_{c}").alias(c)
-            for c in value_cols
-            if c not in (turn_ts, tiebreak_col)
-        ],
-    )
-    t_all = t.drop("_bounds").unionByName(seeds, allowMissingColumns=True)
-
-    # within-chunk sorted-merge carry (same construction as asof_join,
-    # but partitioned by (entity, _tgt))
-    anchor_payload = [c for c in a.columns if c not in (entity_col, "_tgt", "_bounds")]
-    tt = t_all.select(
-        F.col(entity_col),
-        F.col("_tgt"),
-        F.col(turn_ts).alias("_ts"),
-        F.lit(0).alias("_is_anchor"),
-        F.col(tiebreak_col).cast("long").alias("_tie"),
-        F.struct(*[F.col(c).alias(f"asof_{c}") for c in value_cols]).alias("_carry"),
-    )
-    aa = a.select(
-        F.col(entity_col),
-        F.col("_tgt"),
-        F.col(anchor_ts).alias("_ts"),
-        F.lit(1).alias("_is_anchor"),
-        F.lit(None).cast("long").alias("_tie"),
-        F.lit(None).cast(tt.schema["_carry"].dataType).alias("_carry"),
-        *[F.col(c) for c in anchor_payload],
-    )
-    u = tt.unionByName(aa, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(entity_col, "_tgt")
-        .orderBy(F.col("_ts").asc(), F.col("_is_anchor").asc(), F.col("_tie").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    u = u.withColumn("_asof", F.last("_carry", ignorenulls=True).over(w))
-    hot_out = u.filter(F.col("_is_anchor") == 1).select(
-        F.col(entity_col),
-        *[F.col(c) for c in anchor_payload],
-        *[F.col("_asof").getField(f"asof_{c}").alias(f"asof_{c}") for c in value_cols],
-    )
-    if tolerance_col:
-        hot_out = _null_when_too_old(hot_out, anchor_ts, tolerance_col, value_cols)
-    return cold_out.unionByName(hot_out.select(cold_out.columns))
+    t = hot_t.join(bounds, entity_col).withColumn("_tgt", chunk_of(turn_ts)).drop("_bounds")
+    a = hot_a.join(bounds, entity_col).withColumn("_tgt", chunk_of(anchor_ts)).drop("_bounds")
+    hot_out = _asof_plan(t, a, (entity_col, "_tgt"), *args)
+    return cold_out.unionByName(hot_out)
 
 
 def asof_join_grouped(

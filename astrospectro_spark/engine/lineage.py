@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from astrospectro_spark.engine.windows import featurize_expr
+from astrospectro_spark.sources.snapshot_log import table_checksum
 
 LINEAGE_SCHEMA = (
     "run_id string, bucket int, status string, n_rows long, checksum long, "
@@ -67,19 +68,6 @@ def bucketize(df: DataFrame, n_buckets: int) -> DataFrame:
     over an already-bucket-laid-out 100 TB table does ZERO extra
     write+read. ``n_buckets`` must equal the FeatureRun's."""
     return df.withColumn("_bucket", _bucket_col(n_buckets))
-
-
-def _checksum(df: DataFrame) -> tuple[int, int]:
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr(
-                "bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in df.columns) + "))"
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    return int(row.n), int(row.h)
 
 
 class FeatureRun:
@@ -181,7 +169,7 @@ class FeatureRun:
             for r in self.lineage().filter(F.col("status") == "committed").collect()
         }
         for b in sorted(done):
-            got = _checksum(staged.filter(F.col("_bucket") == b).drop("_bucket"))
+            got = table_checksum(staged.filter(F.col("_bucket") == b).drop("_bucket"))
             if got != recorded.get(b):
                 raise ValueError(
                     f"bucket {b}: input content changed since commit "
@@ -220,7 +208,7 @@ class FeatureRun:
             if fail_after is not None and n_done >= fail_after:
                 raise RuntimeError(f"injected failure after {n_done} buckets")
             part = staged.filter(F.col("_bucket") == b).drop("_bucket")
-            in_rows, in_sum = _checksum(part)
+            in_rows, in_sum = table_checksum(part)
             feats = self.featurizer(part)
             bucket_path = os.path.join(self.data_dir, f"bucket={b}")
             feats.write.mode("overwrite").parquet(bucket_path)
@@ -230,7 +218,7 @@ class FeatureRun:
 
             release_cached(feats)
             out = self.spark.read.parquet(bucket_path)
-            n_rows, checksum = _checksum(out)
+            n_rows, checksum = table_checksum(out)
             self._append_lineage(
                 run_id=self.run_id,
                 bucket=b,

@@ -5,9 +5,10 @@ task; a conversation holding 30% of a 10^12-turn table would serialise
 the job. AQE's skew-join splitting cannot split a window/groupBy key
 (SURVEY.md §4 custom-work 1), so this module does it explicitly:
 
-1. **Census** — row counts per conv_id (one cheap agg). Conversations
-   above ``hot_threshold`` rows are "hot"; the rest take the normal
-   single-window path.
+1. **Census** — row counts per conv_id (one cheap agg,
+   :func:`split_hot`, shared with ``asof.asof_join_salted``).
+   Conversations above ``hot_threshold`` rows are "hot"; the rest take
+   the normal single-window path.
 2. **Range salting** — per hot conversation, ``approx_percentile`` of
    the ts axis yields k-1 boundaries → ``chunk_id`` per row (array
    fold, no window). This is the graft analogue of the reference's
@@ -52,8 +53,7 @@ from astrospectro_spark.engine.windows import (
     SESSION_GAP_S,
     SMAX,
     SUM,
-    enum_decode,
-    enum_decode_map,
+    _ts_us,
     feature_plan,
     plan_lookback,
     stage_columns,
@@ -63,8 +63,18 @@ DEFAULT_HOT_THRESHOLD = 2_000_000
 DEFAULT_CHUNK_TARGET = 500_000
 
 
-def _us(col="ts"):
-    return F.unix_micros(F.col(col).cast("timestamp"))
+def split_hot(
+    census_of: DataFrame, hot_threshold: int, *dfs: DataFrame, entity_col: str = "conv_id"
+) -> list[tuple[DataFrame, DataFrame]]:
+    """The hot-key decision: entities with more than ``hot_threshold``
+    rows in ``census_of`` are hot. Returns ``(cold rows, hot rows)`` of
+    each of ``dfs``, split by a broadcast anti/semi join on the hot ids."""
+    census = census_of.groupBy(entity_col).agg(F.count(F.lit(1)).alias("_n"))
+    hot_ids = F.broadcast(census.filter(F.col("_n") > hot_threshold).select(entity_col))
+    return [
+        (d.join(hot_ids, entity_col, "left_anti"), d.join(hot_ids, entity_col, "left_semi"))
+        for d in dfs
+    ]
 
 
 def featurize_salted(
@@ -75,18 +85,15 @@ def featurize_salted(
     include_text: bool = True,
     wide: bool = False,
     enum_shuffle: bool = False,
-    decode_enums: bool = False,
 ) -> DataFrame:
     """featurize_expr semantics with hot conversations split into
     ts-range chunks that run as parallel tasks.
 
     ``enum_shuffle=True`` (narrow ``include_text=False`` contract only,
     see :func:`featurize_expr`) carries ``role``/``tool`` as 64-bit
-    codes through every exchange of BOTH the cold and hot branches.
-    The default output KEEPS the codes (BIGINT columns; decode lazily
-    at read via ``windows.enum_decode``); ``decode_enums=True`` decodes
-    once after the union via broadcast dims — bit-identical to the
-    string path.
+    codes through every exchange of BOTH the cold and hot branches;
+    the output KEEPS the codes (BIGINT columns; decode lazily at read
+    via ``windows.enum_decode``).
 
     The hot slice is cached after chunk assignment: the salted plan
     consumes it three times (real rows + two context-copy branches) and
@@ -99,19 +106,12 @@ def featurize_salted(
     result so long multi-bucket runs don't accumulate cached blocks.
     """
     staged = stage_columns(df, include_text, wide, enum_shuffle)
-    census = df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("_n"))
-    hot_ids = census.filter(F.col("_n") > hot_threshold).select("conv_id")
-
-    cold = staged.join(F.broadcast(hot_ids), "conv_id", "left_anti")
+    [(cold, hot)] = split_hot(df, hot_threshold, staged)
     cold_out = feature_plan(cold, gap_s=gap_s, wide=wide, enum_shuffle=enum_shuffle)
-
-    hot = staged.join(F.broadcast(hot_ids), "conv_id", "left_semi")
     hot_out, handles = _featurize_hot(
         hot, chunk_target_rows, gap_s=gap_s, wide=wide, enum_shuffle=enum_shuffle
     )
     out = cold_out.unionByName(hot_out)
-    if enum_shuffle and decode_enums:
-        out = enum_decode(out, df, enum_decode_map(wide)).select(cold_out.columns)
     out._astrospectro_cached = handles  # fast path for the exact object
     with _REGISTRY_LOCK:
         _CACHE_REGISTRY.extend(handles)  # survives downstream transformations
@@ -165,10 +165,17 @@ def compute_ts_bounds(
     df: DataFrame, chunk_target_rows: int, ts_col: str = "ts", entity_col: str = "conv_id"
 ) -> DataFrame:
     """Per-entity ts-range chunk boundaries: a fixed GRID-point
-    approx-quantile grid, subsampled to ceil(n/target) chunks.
-    Boundaries are actual data values, so after array_distinct every
-    interior chunk holds >= 1 row; parallelism per entity caps at GRID.
-    Returns (entity, _bounds array<bigint> of epoch-us cut points)."""
+    approx-quantile grid, subsampled to ceil(n/target) chunks;
+    parallelism per entity caps at GRID. Returns (entity, _bounds
+    array<bigint> of ascending epoch-us cut points).
+
+    Invariant: every bound is a real row's ts. ``percentile_approx``
+    returns sampled input values, and epoch-us values pass its double
+    summary exactly (|us| < 2^53, i.e. until the year 2255). So chunk
+    ``t >= 1`` (rows with ``b_t <= ts < b_{t+1}``) holds the row at
+    ``b_t``: every interior chunk is non-empty, and a probe with
+    ``chunk_of(probe_ts) == t`` has the latest row at or before it in
+    chunk ``t`` — what lets the salted as-of join run per chunk."""
     fracs = ", ".join(str((i + 1) / GRID) for i in range(GRID - 1))
     return (
         df.groupBy(entity_col)
@@ -211,7 +218,7 @@ def compute_ts_bounds(
 
 def chunk_of(ts_col: str = "ts") -> "F.Column":
     """chunk id = number of boundaries <= ts (requires joined _bounds)."""
-    us = _us(ts_col)
+    us = _ts_us(ts_col)
     return F.aggregate(
         "_bounds", F.lit(0), lambda acc, b: acc + F.when(us >= b, 1).otherwise(0)
     )
@@ -229,7 +236,7 @@ def _featurize_hot(
     # ---- 2. range salting: ts-quantile boundaries per hot conv
     bounds = compute_ts_bounds(hot, chunk_target_rows)
     hot = hot.join(F.broadcast(bounds), "conv_id")
-    us = _us("ts")
+    us = _ts_us("ts")
     hot = hot.withColumn("_chunk", chunk_of("ts")).persist()
 
     # ---- 3. overlap margin: copy context rows into later chunks

@@ -36,7 +36,7 @@ backfill ≙ post-merge NaN fill (src/pipeline/feature_engineering.py:1586-1615)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 SESSION_GAP_S = 1800.0
@@ -434,6 +434,80 @@ def _ts_us(col: str = "ts") -> Column:
     reduction order)."""
     return F.unix_micros(F.col(col).cast("timestamp"))
 
+
+# ---- the O(1)-per-row window tricks, each defined once. Spark
+# re-aggregates a SLIDING frame from scratch for every row
+# (SlidingWindowFunctionFrame: O(rows-in-frame) updates per row), while a
+# frame from UNBOUNDED PRECEDING is evaluated incrementally (rows are only
+# ever added as the upper bound advances: O(1) per row amortized). Each
+# helper states when its rewrite is exact.
+def _growing(wr: WindowSpec, upper: int) -> WindowSpec:
+    return wr.rangeBetween(Window.unboundedPreceding, upper)
+
+
+def range_count(wr: WindowSpec, width_us: int) -> Column:
+    """Rows with an order key in ``[t - width_us, t]``, over the range
+    spec ``wr`` (partitioned, ordered by an integer-µs key), as the
+    difference of two growing frames: rows in ``(-inf, t]`` minus rows
+    in ``(-inf, t - width_us)``. Keys are integers, so
+    ``(-inf, t - X) == (-inf, t - X - 1]`` exactly, and a difference of
+    int counts equals the sliding count bit for bit."""
+    return F.count(F.lit(1)).over(_growing(wr, 0)) - F.count(F.lit(1)).over(
+        _growing(wr, -width_us - 1)
+    )
+
+
+def range_sum(c, wr: WindowSpec, width_us: int) -> Column:
+    """Sum of ``c`` over ``[t - width_us, t]`` as a growing-frame
+    difference (see :func:`range_count`); the empty "before" frame sums
+    to NULL and is coalesced to 0. Exact when ``c`` is an integer
+    column (int64 sums), which is how every caller uses it."""
+    return F.sum(c).over(_growing(wr, 0)) - F.coalesce(
+        F.sum(c).over(_growing(wr, -width_us - 1)), F.lit(0)
+    )
+
+
+def lagz(c: Column, k: int, w: WindowSpec) -> Column:
+    """``c`` k rows back, 0 before the partition head. With ``c`` a
+    running sum over ``w``'s rows, ``c - lagz(c, k, w)`` is the sum over
+    the last k rows (fewer at the head, as the sliding frame) in O(1)
+    per row; exact for int64 sums and their int counts, so the sums,
+    means and moment formulas built on them match the sliding originals
+    bit for bit."""
+    return F.coalesce(F.lag(c, k).over(w), F.lit(0))
+
+
+def block_minmax(agg, base: str, width: int, w: WindowSpec) -> Column:
+    """Rolling max/min over ``width`` rows (a multiple of ``ROLL_ROWS``)
+    from ``base``, the ``ROLL_ROWS``-row sliding max/min: ``agg``
+    (``F.greatest``/``F.least``) of base at lags 0, 5, ..., width - 5.
+    The blocks tile the frame exactly; at partition heads the early
+    blocks already cover ``[1, t]`` and the missing lags are NULL, which
+    greatest/least skip. Comparisons, not sums: exact for any type."""
+    return agg(
+        F.col(base), *[F.lag(base, j).over(w) for j in range(ROLL_ROWS, width, ROLL_ROWS)]
+    )
+
+
+def boundary_carry(x: Column, wcum: WindowSpec, at: Column | None = None) -> Column:
+    """``x`` at the latest row where ``at`` holds (default: a session
+    boundary, ``_sb == 1``), NULL before the first one:
+    ``last(when(at, x), ignorenulls)`` over the running frame ``wcum``.
+    With ``x`` = a running sum minus the row's own term, it is the sum
+    just before the boundary, so ``sum - carry`` is the within-session
+    running sum without a (conv, session) window: exact for int64."""
+    flag = F.col("_sb") == 1 if at is None else at
+    return F.last(F.when(flag, x), ignorenulls=True).over(wcum)
+
+
+def session_max(sid: Column, x: Column, wcum: WindowSpec) -> Column:
+    """``max(struct(sid, x))`` over the running frame: session ids are
+    nondecreasing in the window order, so the lexicographic max lands
+    in the CURRENT session and its field ``x`` is the within-session
+    running max of ``x`` (min via ``-x``). Exact, comparisons only."""
+    return F.max(F.struct(sid.alias("s"), x.alias("x"))).over(wcum)
+
+
 # ---- stitch kinds. The plan runs over one window partition; the salted
 # path (engine.skew) runs it per (conv_id, chunk) over the chunk's rows
 # plus a copied suffix of the history before the chunk (its context
@@ -501,7 +575,7 @@ def plan_lookback(wide: bool) -> tuple[int, int]:
     return ROLL_ROWS - 1, RATE_WINDOW_S * 1_000_000
 
 
-def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
+def _wide_windows(df, w, wcum, wr, us, gap_s) -> DataFrame:
     """The wide tier's window columns, in DEPENDENCY LAYERS: each layer
     is one projection of mutually independent window expressions, so
     Catalyst extracts the whole layer into a single WindowExec pass
@@ -534,32 +608,13 @@ def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
 
     # ---- RANGE first: every rangeBetween frame while the row is
     # narrow (merges with the caller's rate_60s node — same spec,
-    # adjacent, independent).
-    #
-    # GROWING-FRAME form (round-6 optimization): a sliding range frame
-    # [-X, 0] is re-aggregated from scratch for every row by Spark's
-    # SlidingWindowFunctionFrame — O(rows-in-frame) updates PER ROW,
-    # which on a dense mega-conversation (3600 s frame ≈ 110 rows at
-    # ~33 s/turn) dominated the hot task. count/sum over [-X, 0] are
-    # instead computed as the DIFFERENCE of two frames with an
-    # UNBOUNDED PRECEDING lower bound, which Spark executes with the
-    # incremental UnboundedPrecedingWindowFunctionFrame (rows are only
-    # ever ADDED as the upper bound advances — O(1)/row amortized):
-    #   rows in [t-X, t]  =  rows in (-inf, t]  -  rows in (-inf, t-X)
-    # Bounds are integer microseconds, so (-inf, t-X) == (-inf, t-X-1µs]
-    # exactly. Counts are ints and the sums are int64 over int text_len
-    # — both differences are bit-identical to the sliding originals
-    # (empty "before" frame: count 0, sum NULL → coalesce 0).
-    cnt_le = F.count(F.lit(1)).over(wgrow(0))
-    sum_le = F.sum(tl).over(wgrow(0))
-
+    # adjacent, independent), as growing-frame differences (a sliding
+    # 3600 s frame is ~110 rows per row on a dense mega-conversation).
     def _rate(sec: int) -> Column:
-        before = F.count(F.lit(1)).over(wgrow(-sec * 1_000_000 - 1))
-        return (cnt_le - before).cast("double")
+        return range_count(wr, sec * 1_000_000).cast("double")
 
     def _tsum(sec: int) -> Column:
-        before = F.sum(tl).over(wgrow(-sec * 1_000_000 - 1))
-        return (sum_le - F.coalesce(before, F.lit(0))).cast("long")
+        return range_sum(tl, wr, sec * 1_000_000).cast("long")
 
     df = df.withColumns(
         {
@@ -590,14 +645,8 @@ def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
             "lag7_text_len_delta": (tl - F.lag(tl, 7).over(w)).cast("double"),
             "lag2_ts_gap_s": (us - F.lag(us, 2).over(w)).cast("double") / F.lit(1e6),
             "lag3_ts_gap_s": (us - F.lag(us, 3).over(w)).cast("double") / F.lit(1e6),
-            # only the base-width min/max frames are evaluated as
-            # sliding frames; the 10/20-row frames tile exactly into
-            # base-width blocks and are EXACT block compositions
-            # computed in W1: max over [t-19, t] = greatest of the 5-row
-            # block maxima at lags 0/5/10/15 (at partition heads the
-            # early blocks already cover [1, t] and missing lags are
-            # NULL, which greatest/least skip — identical to the frame
-            # max). Comparisons, not sums, so this is exact for any type.
+            # only the base-width min/max frames are sliding; the
+            # 10/20-row ones are block_minmax compositions in W1
             "roll_max_text_len_5": F.max(tl).over(w5).cast("double"),
             "roll_min_text_len_5": F.min(tl).over(w5).cast("double"),
             "gap_roll_max_5": F.max(gap).over(w5),
@@ -653,57 +702,31 @@ def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
         }
     )
 
-    # ---- W1: windows over W0-derived columns, one node.
-    #
-    # The rolling sum/mean/std family lives HERE as cumulative
-    # differences of the W0 running sums (round-6 optimization):
-    # Spark re-aggregates a sliding rows frame from scratch per row
-    # (O(k) updates/row/function), so the 10/20-row frames cost ~30
-    # update calls per row per statistic; the same values fall out of
-    # O(1) lag differences of cum_text_len/_ctl2/_active_us/cum-role
-    # counters. All sums are exact int64 (and Average's double
-    # accumulation over small ints is exact), so sum, sum/count and the
-    # moment formulas are bit-identical to the sliding originals.
-    # min/max cannot be expressed as differences: 5-row blocks from W0.
-    def _lagz(c: Column, k: int) -> Column:
-        return F.coalesce(F.lag(c, k).over(w), F.lit(0))
-
-    def _blocks(agg, c: str, width: int) -> Column:
-        return agg(
-            F.col(c),
-            *[F.lag(c, j * ROLL_ROWS).over(w) for j in range(1, width // ROLL_ROWS)],
-        )
-
+    # ---- W1: windows over W0-derived columns, one node: the rolling
+    # sum/mean/std family as lag differences of the W0 running sums
+    # (lagz), min/max as compositions of the W0 5-row blocks.
     cum_tl = F.col("cum_text_len")
     ctl2 = F.col("_ctl2")
     act = F.col("_active_us")
     n5 = F.least(rn, F.lit(ROLL_ROWS))
     n10 = F.least(rn, F.lit(WIDE_ROLL10))
     n20 = F.least(rn, F.lit(WIDE_ROLL20))
-    s5 = cum_tl - _lagz(cum_tl, ROLL_ROWS)
-    s10 = cum_tl - _lagz(cum_tl, WIDE_ROLL10)
-    s20 = cum_tl - _lagz(cum_tl, WIDE_ROLL20)
+    s5 = cum_tl - lagz(cum_tl, ROLL_ROWS, w)
+    s10 = cum_tl - lagz(cum_tl, WIDE_ROLL10, w)
+    s20 = cum_tl - lagz(cum_tl, WIDE_ROLL20, w)
     m5 = s5 / n5
     m10 = s10 / n10
     m20 = s20 / n20
-    m5_2 = (ctl2 - _lagz(ctl2, ROLL_ROWS)) / n5
-    m10_2 = (ctl2 - _lagz(ctl2, WIDE_ROLL10)) / n10
-    m20_2 = (ctl2 - _lagz(ctl2, WIDE_ROLL20)) / n20
-    # the (conv, session) family WITHOUT its own WindowExec (round-6).
-    # A (conv, session) window costs a dedicated Sort + full buffer pass
-    # even though it reuses the exchange; every member of the family is
-    # instead expressed over the existing wcum frame (same technique
-    # q_feature_vector_wide uses natively):
-    # - max/min: lexicographic struct-max — session_id is nondecreasing
-    #   in (ts, turn_idx) order, so max(struct(session_id, x)) over the
-    #   conv prefix lands in the CURRENT session → within-session
-    #   running max of x (min via negation). Sentinel −1 stands in for
-    #   "no real gap yet" (gaps are >= 0; boundary rows and the rn=1
-    #   NULL-gap row map to −1, translated back to NULL at the end).
-    # - sums: cumulative minus its value carried at the last boundary
-    #   (the sess_cum_text_len trick), exact int64.
+    m5_2 = (ctl2 - lagz(ctl2, ROLL_ROWS, w)) / n5
+    m10_2 = (ctl2 - lagz(ctl2, WIDE_ROLL10, w)) / n10
+    m20_2 = (ctl2 - lagz(ctl2, WIDE_ROLL20, w)) / n20
+    # the (conv, session) family WITHOUT its own WindowExec: a (conv,
+    # session) window costs a dedicated Sort + full buffer pass, so
+    # max/min are session_max structs and sums boundary carries over the
+    # existing wcum frame. Sentinel −1 stands in for "no real gap yet"
+    # (gaps are >= 0; boundary rows and the rn=1 NULL-gap row map to −1,
+    # translated back to NULL at the end).
     sid = F.col("session_id")
-    sb = F.col("_sb") == 1
     sgap_in = F.when((F.col("_sb") == 0) & gap.isNotNull(), gap).otherwise(
         F.lit(-1.0)
     )
@@ -711,23 +734,15 @@ def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
     ctrapn = F.count("_trap_s").over(wcum)
     df = df.withColumns(
         {
-            "_sess_max": F.max(F.struct(sid.alias("s"), tl.alias("x"))).over(wcum),
-            "_sess_min": F.max(F.struct(sid.alias("s"), (-tl).alias("x"))).over(
-                wcum
-            ),
-            "_sgap": F.max(F.struct(sid.alias("s"), sgap_in.alias("x"))).over(wcum),
-            "_sess_carry": F.last(F.when(sb, cum_tl - tll), ignorenulls=True).over(
-                wcum
-            ),
-            "_s2carry": F.last(F.when(sb, ctl2 - tll * tll), ignorenulls=True).over(
-                wcum
-            ),
+            "_sess_max": session_max(sid, tl, wcum),
+            "_sess_min": session_max(sid, -tl, wcum),
+            "_sgap": session_max(sid, sgap_in, wcum),
+            "_sess_carry": boundary_carry(cum_tl - tll, wcum),
+            "_s2carry": boundary_carry(ctl2 - tll * tll, wcum),
             "_ctrap": F.coalesce(ctrap, F.lit(0)),
-            "_trapcarry": F.last(
-                F.when(sb, F.coalesce(ctrap, F.lit(0))), ignorenulls=True
-            ).over(wcum),
+            "_trapcarry": boundary_carry(F.coalesce(ctrap, F.lit(0)), wcum),
             "_ctrapn": ctrapn,
-            "_trapncarry": F.last(F.when(sb, ctrapn), ignorenulls=True).over(wcum),
+            "_trapncarry": boundary_carry(ctrapn, wcum),
             "cum_role_changes": F.sum("role_changed").over(wcum).cast("long"),
             "roll_role_changes_10": F.sum("role_changed").over(w10).cast("long"),
             "wing_auc_4": F.sum("_trap_w").over(wtrap) / F.lit(2000.0),
@@ -750,11 +765,12 @@ def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
                 m10_2 - m10 * m10 > 0, (tll - m10) / F.sqrt(m10_2 - m10 * m10)
             ).otherwise(F.lit(0.0)),
             "roll_assistant_rate_10": (
-                F.col("cum_count_assistant") - _lagz(F.col("cum_count_assistant"), WIDE_ROLL10)
+                F.col("cum_count_assistant")
+                - lagz(F.col("cum_count_assistant"), WIDE_ROLL10, w)
             )
             / n10,
             "roll_tool_rate_10": (
-                F.col("cum_tool_set") - _lagz(F.col("cum_tool_set"), WIDE_ROLL10)
+                F.col("cum_tool_set") - lagz(F.col("cum_tool_set"), WIDE_ROLL10, w)
             )
             / n10,
             # rn=1 guard: the sliding original divided a NULL sum by a
@@ -763,20 +779,21 @@ def _wide_windows(df, w, wcum, wgrow, us, gap_s) -> DataFrame:
             # explicitly, which is the identical value.
             "gap_roll_mean_5": F.when(
                 rn > 1,
-                (act - _lagz(act, ROLL_ROWS)) / F.least(rn - 1, F.lit(ROLL_ROWS)),
+                (act - lagz(act, ROLL_ROWS, w)) / F.least(rn - 1, F.lit(ROLL_ROWS)),
             )
             / F.lit(1e6),
             "gap_roll_mean_10": F.when(
                 rn > 1,
-                (act - _lagz(act, WIDE_ROLL10)) / F.least(rn - 1, F.lit(WIDE_ROLL10)),
+                (act - lagz(act, WIDE_ROLL10, w)) / F.least(rn - 1, F.lit(WIDE_ROLL10)),
             )
             / F.lit(1e6),
-            "roll_max_text_len_10": _blocks(F.greatest, "roll_max_text_len_5", WIDE_ROLL10),
-            "roll_min_text_len_10": _blocks(F.least, "roll_min_text_len_5", WIDE_ROLL10),
-            "roll_max_text_len_20": _blocks(F.greatest, "roll_max_text_len_5", WIDE_ROLL20),
-            "roll_min_text_len_20": _blocks(F.least, "roll_min_text_len_5", WIDE_ROLL20),
-            "gap_roll_max_10": _blocks(F.greatest, "gap_roll_max_5", WIDE_ROLL10),
-            "gap_roll_min_10": _blocks(F.least, "gap_roll_min_5", WIDE_ROLL10),
+            **{
+                f"roll_{m}_text_len_{n}": block_minmax(agg, f"roll_{m}_text_len_5", n, w)
+                for n in (WIDE_ROLL10, WIDE_ROLL20)
+                for m, agg in (("max", F.greatest), ("min", F.least))
+            },
+            "gap_roll_max_10": block_minmax(F.greatest, "gap_roll_max_5", WIDE_ROLL10, w),
+            "gap_roll_min_10": block_minmax(F.least, "gap_roll_min_5", WIDE_ROLL10, w),
         }
     )
     return df
@@ -996,12 +1013,7 @@ def feature_plan(
     w = Window.partitionBy(*part).orderBy("ts", "turn_idx")
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    def wgrow(upper_us: int):
-        return (
-            Window.partitionBy(*part)
-            .orderBy(F.col("_usq"))
-            .rangeBetween(Window.unboundedPreceding, upper_us)
-        )
+    wr = Window.partitionBy(*part).orderBy(F.col("_usq"))
 
     us = _ts_us("ts")
     key_cols = [c for c in KEY_COLS if c in df.columns]
@@ -1055,9 +1067,7 @@ def feature_plan(
     df = df.withColumns(
         {
             "session_id": F.sum("_sb").over(wcum).cast("int"),
-            "_tis_carry": F.last(
-                F.when(F.col("_sb") == 1, F.col("_rn") - 1), ignorenulls=True
-            ).over(wcum),
+            "_tis_carry": boundary_carry(F.col("_rn") - 1, wcum),
         }
     )
     # rolling turn-rate on the REAL time axis: count of turns with
@@ -1068,19 +1078,12 @@ def feature_plan(
     # us-Sort materializes ~20 fields per row here, vs ~100 if it ran
     # after the wide tier (the wide tier's own range batch merges into
     # this node — same partition/order spec, adjacent, independent).
-    # growing-frame difference instead of a sliding [-60s, 0] frame —
-    # same O(1)/row trick as the wide range family (see _wide_windows):
-    # count in [t-60s, t] = count in (-inf, t] - count in (-inf, t-60s)
     df = df.withColumn(
-        "rate_60s",
-        (
-            F.count(F.lit(1)).over(wgrow(0))
-            - F.count(F.lit(1)).over(wgrow(-RATE_WINDOW_S * 1_000_000 - 1))
-        ).cast("double"),
+        "rate_60s", range_count(wr, RATE_WINDOW_S * 1_000_000).cast("double")
     )
     kinds = dict(_BASE_STITCH)
     if wide:
-        df = _wide_windows(df, w, wcum, wgrow, us, gap_s)
+        df = _wide_windows(df, w, wcum, wr, us, gap_s)
         kinds.update(_WIDE_STITCH)
     if stitch is not None:
         df = stitch(df, kinds)
@@ -1110,7 +1113,6 @@ def featurize_expr(
     include_text: bool = True,
     wide: bool = False,
     enum_shuffle: bool = False,
-    decode_enums: bool = False,
 ) -> DataFrame:
     """The full per-turn feature vector as ONE window-expression plan:
     :func:`stage_columns` then :func:`feature_plan` over ``conv_id``.
@@ -1126,13 +1128,7 @@ def featurize_expr(
     wide tier — come back as BIGINT): strings are recovered lazily at
     read time via :func:`enum_decode` with :func:`enum_decode_map`
     against the source table (or the dims ``featurize_job`` writes
-    next to the feature table). Decoding inside this plan —
-    ``decode_enums=True``, bit-identical to the string path,
-    pytest-locked — costs one column-pruned distinct scan plus a
-    broadcast join per dim, which is pure overhead for consumers that
-    only ever compare these columns for equality (round-5 judge item:
-    the three decode dims were the measured local regression of the
-    enum trade).
+    next to the feature table), bit-identical to the string path.
 
     Scale notes (100 TB): all windows share ``partitionBy(conv_id)`` —
     Catalyst plans a single hash exchange on conv_id followed by one
@@ -1149,16 +1145,13 @@ def featurize_expr(
     default; the text-carrying variant exists for pipelines that
     materialise a denormalised table.
     """
-    out = feature_plan(
+    return feature_plan(
         stage_columns(df, include_text, wide, enum_shuffle),
         gap_s=gap_s,
         wide=wide,
         enum_shuffle=enum_shuffle,
         include_labels=include_labels,
     )
-    if enum_shuffle and decode_enums:
-        out = enum_decode(out, df, enum_decode_map(wide)).select(out.columns)
-    return out
 
 
 def enum_decode_map(wide: bool) -> dict[str, str]:

@@ -29,16 +29,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from astrospectro_spark.engine.asof import asof_join, asof_join_grouped
+from astrospectro_spark.engine.windows import (
+    _ts_us,
+    block_minmax,
+    boundary_carry,
+    lagz,
+    range_count,
+    range_sum,
+    session_max,
+)
 
 SESSION_GAP_S = 1800
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _us(col="ts"):
-    return F.unix_micros(F.col(col).cast("timestamp"))
 
 
 _W = lambda: Window.partitionBy("user_id").orderBy("ts", "event_id")  # noqa: E731
@@ -53,7 +58,7 @@ def q_sessionize(spark, sf_dir):
     """ts-gap sessionization (SURVEY §2.5 W1; reference peak detection
     src/pipeline/peak_detector.py:94-132)."""
     ev = _t(spark, sf_dir, "events")
-    gap_s = (_us() - F.lag(_us()).over(_W())).cast("double") / 1e6
+    gap_s = (_ts_us() - F.lag(_ts_us()).over(_W())).cast("double") / 1e6
     df = ev.withColumn(
         "session_id",
         F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(_wcum()).cast("long"),
@@ -62,7 +67,7 @@ def q_sessionize(spark, sf_dir):
     return df.select(
         "event_id",
         "user_id",
-        _us().alias("ts_us"),
+        _ts_us().alias("ts_us"),
         "session_id",
         F.row_number().over(ws).cast("long").alias("turn_in_session"),
     )
@@ -78,7 +83,7 @@ def q_lag_delta(spark, sf_dir):
         "event_id",
         "user_id",
         F.round((F.col("value") - F.lag("value").over(w)), 6).alias("lag1_value_delta"),
-        F.round(((_us() - F.lag(_us()).over(w)).cast("double") / 1e6), 6).alias("lag1_ts_gap_s"),
+        F.round(((_ts_us() - F.lag(_ts_us()).over(w)).cast("double") / 1e6), 6).alias("lag1_ts_gap_s"),
         F.round((F.lead("value").over(w) - F.col("value")), 6).alias("label_lead1_value_delta"),
     )
 
@@ -103,7 +108,7 @@ def q_rolling_rate(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     wr = (
         Window.partitionBy("user_id")
-        .orderBy(_us())
+        .orderBy(_ts_us())
         .rangeBetween(-86_400 * 1_000_000, 0)
     )
     return ev.select(
@@ -213,7 +218,7 @@ def q_session_stats(spark, sf_dir):
     (of the already-aggregated partials) instead of a second full-table
     exchange on event_id."""
     ev = _t(spark, sf_dir, "events")
-    gap_s = (_us() - F.lag(_us()).over(_W())).cast("double") / 1e6
+    gap_s = (_ts_us() - F.lag(_ts_us()).over(_W())).cast("double") / 1e6
     ev = ev.withColumn(
         "session_id",
         F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(_wcum()).cast("long"),
@@ -222,7 +227,7 @@ def q_session_stats(spark, sf_dir):
         ev.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round((F.max(_us()) - F.min(_us())).cast("double") / 1e6, 6).alias("duration_s"),
+            F.round((F.max(_ts_us()) - F.min(_ts_us())).cast("double") / 1e6, 6).alias("duration_s"),
             F.round(F.avg("value"), 6).alias("mean_value"),
             F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).cast("long").alias("n_errors"),
         )
@@ -386,7 +391,7 @@ def q_regression_slope(spark, sf_dir):
     conditioning discipline q_moments uses (slope is shift-invariant,
     so semantics are unchanged)."""
     ev = _t(spark, sf_dir, "events")
-    us = _us()
+    us = _ts_us()
     x = (us - F.min(us).over(Window.partitionBy("user_id"))).cast("double") / 1e6
     return (
         ev.withColumn("_x", x)
@@ -440,7 +445,7 @@ def q_trapezoid_auc(spark, sf_dir):
     (y_i + y_{i-1})/2 * dt)."""
     ev = _t(spark, sf_dir, "events")
     w = _W()
-    x = _us().cast("double") / 1e6
+    x = _ts_us().cast("double") / 1e6
     seg = (F.col("value") + F.lag("value").over(w)) / 2 * (x - F.lag(x).over(w))
     return (
         ev.withColumn("_seg", seg)
@@ -501,7 +506,7 @@ def q_profile_morphology(spark, sf_dir):
     unordered windows over user_id, the wing segments an ordered window
     on the same key, the final groupBy reuses the partitioning."""
     ev = _t(spark, sf_dir, "events")
-    us = _us()
+    us = _ts_us()
     wp = Window.partitionBy("user_id")
     wo = _W()
     v = F.col("value")
@@ -632,7 +637,7 @@ def q_feature_vector(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     w = _W()
     wcum = _wcum()
-    us = _us()
+    us = _ts_us()
     gap_s = (us - F.lag(us).over(w)).cast("double") / 1e6
     df = ev.withColumn("lag1_ts_gap_s", F.round(gap_s, 6))
     df = df.withColumn(
@@ -640,16 +645,7 @@ def q_feature_vector(spark, sf_dir):
         F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(wcum).cast("long"),
     )
     ws = Window.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
-    # growing-frame difference for the 1d rate (O(1)/row; exact int —
-    # see q_feature_vector_wide): count[t-1d, t] = count(-inf, t] minus
-    # count(-inf, t-1d)
-    _wle = Window.partitionBy("user_id").orderBy(us).rangeBetween(
-        Window.unboundedPreceding, 0
-    )
-    _wbef = Window.partitionBy("user_id").orderBy(us).rangeBetween(
-        Window.unboundedPreceding, -86_400 * 1_000_000 - 1
-    )
-    rate_1d = F.count(F.lit(1)).over(_wle) - F.count(F.lit(1)).over(_wbef)
+    rate_1d = range_count(Window.partitionBy("user_id").orderBy(us), 86_400 * 1_000_000)
     marker = F.when(F.col("event_type").isin("purchase", "signup"), F.col("event_type"))
     return df.select(
         "event_id",
@@ -718,7 +714,7 @@ def q_feature_vector_wide(spark, sf_dir):
     w = _W()
     wcum = _wcum()
     wp = Window.partitionBy("user_id")
-    us = _us()
+    us = _ts_us()
     v = F.col("value")
     gap_s = (us - F.lag(us).over(w)).cast("double") / 1e6
     # staging layers as BATCHED projections: each withColumns dict of
@@ -736,11 +732,7 @@ def q_feature_vector_wide(spark, sf_dir):
                 ~F.col("event_type").eqNullSafe(F.lag("event_type").over(w)), 1
             ).otherwise(0),
             # 5-row block min/max staged once: the 10/20/50-row rolling
-            # min/max are EXACT compositions (greatest/least of this
-            # block at lags 0/5/.../45 — blocks tile the frame; at
-            # partition heads the early blocks already cover [1, t] and
-            # missing lags are NULL, which greatest/least skip).
-            # Comparisons, not sums — exact for doubles too.
+            # min/max are block_minmax compositions of it
             "_vmax5": F.max(v).over(w.rowsBetween(-4, 0)),
             "_vmin5": F.min(v).over(w.rowsBetween(-4, 0)),
         }
@@ -774,11 +766,8 @@ def q_feature_vector_wide(spark, sf_dir):
             "_chigh": F.sum("_hi").over(wcum),
             "_cerr": F.sum("_ef").over(wcum),
             "_cseg": F.sum(seg_sess).over(wcum),
-            # running sums staged for the rolling-frame diff forms
-            # (round-6: sliding integer sums/avgs/counts are computed as
-            # O(1) lag-differences of these cumulatives instead of the
-            # O(frame)/row sliding re-aggregation; exact int64, so every
-            # derived value is bit-identical — see engine/windows)
+            # running sums staged for the rolling-frame lag differences
+            # (windows.lagz)
             "_cgap": F.sum("_gap_us").over(wcum),
             "_ck": F.sum(_kst).over(wcum),
             "_ckn": F.count(_kst).over(wcum),
@@ -807,23 +796,9 @@ def q_feature_vector_wide(spark, sf_dir):
             "_pt2": F.sum(xx * xx * v).over(wp0),
         }
     )
-    # time-range rate/sum family in GROWING-FRAME form: count/sum over
-    # [t-X, t] = the value over (-inf, t] minus the value over
-    # (-inf, t-X) — two unbounded-preceding frames Spark evaluates
-    # incrementally (O(1)/row), where the sliding [-X, 0] originals are
-    # re-aggregated per row (O(rows-in-frame)). Integer counts and
-    # int64 cent-sums make the differences bit-identical.
-    def _wgr(off_us: int):
-        return wp.orderBy("_us").rangeBetween(Window.unboundedPreceding, off_us)
-
-    _cnt_le = F.count(F.lit(1)).over(_wgr(0))
-    _svc_le = F.sum("_vc").over(_wgr(0))
-
-    def _r_cnt(off_us: int):
-        return _cnt_le - F.count(F.lit(1)).over(_wgr(-off_us - 1))
-
-    def _r_svc(off_us: int):
-        return _svc_le - F.coalesce(F.sum("_vc").over(_wgr(-off_us - 1)), F.lit(0))
+    # time-range rate/sum family as growing-frame differences over int
+    # counts and int64 cent-sums (windows.range_count / range_sum)
+    wr = wp.orderBy("_us")
 
     _US_1D, _US_7D = 86_400 * 1_000_000, 7 * 86_400 * 1_000_000
     _US_30D, _US_12H = 30 * 86_400 * 1_000_000, 12 * 3600 * 1_000_000
@@ -834,20 +809,17 @@ def q_feature_vector_wide(spark, sf_dir):
     # matches the sliding originals — see each use site)
     rn_ = F.col("_rn")
 
-    def _lagz(c, n):
-        return F.coalesce(F.lag(c, n).over(w), F.lit(0))
-
     def _vc_sum(n):
-        return F.col("_cvc") - _lagz(F.col("_cvc"), n)
+        return F.col("_cvc") - lagz(F.col("_cvc"), n, w)
 
     def _vc2_sum(n):
-        return F.col("_cvc2") - _lagz(F.col("_cvc2"), n)
+        return F.col("_cvc2") - lagz(F.col("_cvc2"), n, w)
 
     def _nrows(n):
         return F.least(rn_, F.lit(n))
 
     def _gap_sum(n):
-        return F.col("_cgap") - _lagz(F.col("_cgap"), n)
+        return F.col("_cgap") - lagz(F.col("_cgap"), n, w)
 
     def _gap_cnt(n):
         return F.least(rn_ - 1, F.lit(n))
@@ -856,21 +828,9 @@ def q_feature_vector_wide(spark, sf_dir):
         # head row: the sliding original divides a NULL sum by a zero
         # count (NULL); the diff form NULLs it explicitly
         return F.when(rn_ > 1, F.round(_gap_sum(n) / _gap_cnt(n)))
-
-    def _blkmax(base: str, n: int):
-        return F.greatest(
-            F.col(base), *[F.lag(base, j).over(w) for j in range(5, n, 5)]
-        )
-
-    def _blkmin(base: str, n: int):
-        return F.least(
-            F.col(base), *[F.lag(base, j).over(w) for j in range(5, n, 5)]
-        )
     marker = F.when(F.col("event_type").isin("purchase", "signup"), F.col("event_type"))
-    sess_start = F.coalesce(
-        F.last(F.when(F.col("_sb") == 1, F.col("_us")), ignorenulls=True).over(wcum),
-        F.min("_us").over(wp),
-    )
+    is_purchase = F.col("event_type") == "purchase"
+    sess_start = F.coalesce(boundary_carry(F.col("_us"), wcum), F.min("_us").over(wp))
     k = F.get_json_object("props", "$.k").cast("long")
     roll_mean = F.avg(v).over(w5)
     run_max = F.max(v).over(wcum)
@@ -880,30 +840,21 @@ def q_feature_vector_wide(spark, sf_dir):
     )
     # within-session cumulative cents: total cum minus the cum just
     # before the most recent session boundary (exact int carry)
-    carry_c = F.last(
-        F.when(F.col("_sb") == 1, F.col("_cvc") - F.col("_vc")), ignorenulls=True
-    ).over(wcum)
+    carry_c = boundary_carry(F.col("_cvc") - F.col("_vc"), wcum)
     sess_cents = F.col("_cvc") - F.coalesce(carry_c, F.lit(0))
-    tis = (
-        F.col("_rn")
-        - F.coalesce(
-            F.last(F.when(F.col("_sb") == 1, F.col("_rn") - 1), ignorenulls=True).over(wcum),
-            F.lit(0),
-        )
-    )
+    tis = F.col("_rn") - F.coalesce(boundary_carry(F.col("_rn") - 1, wcum), F.lit(0))
     elapsed_raw = (F.col("_us") - sess_start).cast("double") / 1e6
     # running zscore from exact int cent-sums
     m_c = F.col("_cvc") / F.col("_rn")
     var_c = F.col("_cvc2") / F.col("_rn") - m_c * m_c
     streak = F.col("_rn") - F.coalesce(
-        F.last(F.when(F.col("_tc") == 1, F.col("_rn") - 1), ignorenulls=True).over(wcum),
-        F.lit(0),
+        boundary_carry(F.col("_rn") - 1, wcum, at=F.col("_tc") == 1), F.lit(0)
     )
     cum_high = F.sum(F.when(v > 150, 1).otherwise(0)).over(wcum).cast("long")
     vc5_m = _vc_sum(5) / _nrows(5)
     vc5_m2 = _vc2_sum(5) / _nrows(5)
-    sum1d_c = _r_svc(_US_1D)
-    n1d = _r_cnt(_US_1D)
+    sum1d_c = range_sum("_vc", wr, _US_1D)
+    n1d = range_count(wr, _US_1D)
     lagv = F.lag(v).over(w)
     n_conv = F.count(F.lit(1)).over(wp)
     ssx = (v - 100) / 50
@@ -920,10 +871,7 @@ def q_feature_vector_wide(spark, sf_dir):
     # cumulative = cum minus its value just BEFORE the last boundary row
     def _sess(cum_col, own):
         return F.col(cum_col) - F.coalesce(
-            F.last(
-                F.when(F.col("_sb") == 1, F.col(cum_col) - own), ignorenulls=True
-            ).over(wcum),
-            F.lit(0),
+            boundary_carry(F.col(cum_col) - own, wcum), F.lit(0)
         )
 
     vi = F.col("_vi")
@@ -936,33 +884,16 @@ def q_feature_vector_wide(spark, sf_dir):
     sess_c2 = _sess("_cvc2", F.col("_vc") * F.col("_vc"))
     # the boundary row's trapezoid segment is zeroed, so its carry is
     # the plain cumulative value at the boundary
-    sess_auc_int = F.col("_cseg") - F.coalesce(
-        F.last(F.when(F.col("_sb") == 1, F.col("_cseg")), ignorenulls=True).over(wcum),
-        F.lit(0),
-    )
-    # lexicographic struct-max: session_id is nondecreasing, so the max
-    # struct lands in the CURRENT session → within-session running max
-    smax_vc = (
-        F.max(F.struct(F.col("_sid").alias("s"), F.col("_vc").alias("x")))
-        .over(wcum)
-        .getField("x")
-    )
-    smin_vc = -(
-        F.max(F.struct(F.col("_sid").alias("s"), (-F.col("_vc")).alias("x")))
-        .over(wcum)
-        .getField("x")
-    )
+    sess_auc_int = F.col("_cseg") - F.coalesce(boundary_carry(F.col("_cseg"), wcum), F.lit(0))
+    # within-session running max/min (windows.session_max)
+    sid = F.col("_sid")
+    smax_vc = session_max(sid, F.col("_vc"), wcum).getField("x")
+    smin_vc = -session_max(sid, -F.col("_vc"), wcum).getField("x")
     g_in_sess = F.when(
         (F.col("_sb") == 0) & (F.col("_rn") > 1), F.col("_gap_us")
     ).otherwise(F.lit(-1))
-    smax_gap = (
-        F.max(F.struct(F.col("_sid").alias("s"), g_in_sess.alias("x")))
-        .over(wcum)
-        .getField("x")
-    )
-    sess_first = F.coalesce(
-        F.last(F.when(F.col("_sb") == 1, v), ignorenulls=True).over(wcum), first_v
-    )
+    smax_gap = session_max(sid, g_in_sess, wcum).getField("x")
+    sess_first = F.coalesce(boundary_carry(v, wcum), first_v)
     # running integer-unit moments (skew/kurtosis of floor(value))
     rnd = F.col("_rn")
     im1, im2 = F.col("_cvi") / rnd, F.col("_cvi2") / rnd
@@ -1045,8 +976,8 @@ def q_feature_vector_wide(spark, sf_dir):
         F.round(v - F.lag(v, 2).over(w), 6).alias("lag2_value_delta"),
         F.round(v - F.lag(v, 3).over(w), 6).alias("lag3_value_delta"),
         F.last(marker, ignorenulls=True).over(wcum).alias("backfill_marker"),
-        _r_cnt(_US_1D).alias("rate_1d"),
-        _r_cnt(_US_7D).alias("rate_7d"),
+        range_count(wr, _US_1D).alias("rate_1d"),
+        range_count(wr, _US_7D).alias("rate_7d"),
         F.round(roll_mean, 6).alias("roll_mean_value_5"),
         F.round(F.col("_vmin5"), 6).alias("roll_min_value_5"),
         F.round(F.col("_vmax5"), 6).alias("roll_max_value_5"),
@@ -1104,15 +1035,15 @@ def q_feature_vector_wide(spark, sf_dir):
         F.round(_gap_mean_us(5) / 1e6, 6).alias("gap_roll_mean_5"),
         F.round(F.col("_gmax5"), 6).alias("gap_roll_max_5"),
         F.round(F.avg(v).over(w10), 6).alias("roll_mean_value_10"),
-        F.round(_blkmin("_vmin5", 10), 6).alias("roll_min_value_10"),
-        F.round(_blkmax("_vmax5", 10), 6).alias("roll_max_value_10"),
+        F.round(block_minmax(F.least, "_vmin5", 10, w), 6).alias("roll_min_value_10"),
+        F.round(block_minmax(F.greatest, "_vmax5", 10, w), 6).alias("roll_max_value_10"),
         F.round(F.sum(v).over(w10), 6).alias("roll_sum_value_10"),
         F.round(F.sqrt(F.greatest(F.lit(0.0), vc5_m2 - vc5_m * vc5_m)) / 100, 6).alias(
             "roll_std_value_5"
         ),
         F.round(sum1d_c / 100.0, 6).alias("value_sum_1d"),
         snap6(sum1d_c / 100.0 / n1d).alias("value_mean_1d"),
-        F.round(_r_svc(_US_7D) / 100.0, 6).alias("value_sum_7d"),
+        F.round(range_sum("_vc", wr, _US_7D) / 100.0, 6).alias("value_sum_7d"),
         F.round(run_max - run_min, 6).alias("run_depth"),
         F.round(v - run_min, 6).alias("run_range_pos"),
         F.round(F.when(run_max - run_min > 0, (v - run_min) / (run_max - run_min)), 6).alias(
@@ -1148,18 +1079,10 @@ def q_feature_vector_wide(spark, sf_dir):
         F.round(F.exp(-v / 200), 6).alias("exp_decay_value"),
         snap6(v * v / 1000).alias("value_sq_scaled"),
         F.round(F.when(v > 0, F.log2(v)), 6).alias("log2_value"),
-        F.round(
-            F.last(F.when(F.col("event_type") == "purchase", v), ignorenulls=True).over(wcum),
-            6,
-        ).alias("last_purchase_value"),
+        F.round(boundary_carry(v, wcum, at=is_purchase), 6).alias("last_purchase_value"),
         (
             F.col("_rn")
-            - F.coalesce(
-                F.last(
-                    F.when(F.col("event_type") == "purchase", F.col("_rn")), ignorenulls=True
-                ).over(wcum),
-                F.lit(0),
-            )
+            - F.coalesce(boundary_carry(F.col("_rn"), wcum, at=is_purchase), F.lit(0))
         ).cast("long").alias("rows_since_purchase"),
         snap6(F.when(lagv > 0, v / lagv)).alias("value_vs_prev_ratio"),
         snap6(
@@ -1171,24 +1094,24 @@ def q_feature_vector_wide(spark, sf_dir):
         ).alias("k_null_rate_so_far"),
         # ---- growth tier 2 (columns 101-130) ----
         F.round(F.avg(v).over(w20), 6).alias("roll_mean_value_20"),
-        F.round(_blkmin("_vmin5", 20), 6).alias("roll_min_value_20"),
-        F.round(_blkmax("_vmax5", 20), 6).alias("roll_max_value_20"),
+        F.round(block_minmax(F.least, "_vmin5", 20, w), 6).alias("roll_min_value_20"),
+        F.round(block_minmax(F.greatest, "_vmax5", 20, w), 6).alias("roll_max_value_20"),
         F.round(F.sum(v).over(w20), 6).alias("roll_sum_value_20"),
         F.round(
             F.sqrt(F.greatest(F.lit(0.0), vc10_m2 - vc10_m * vc10_m)) / 100, 6
         ).alias("roll_std_value_10"),
         F.round(_gap_mean_us(10) / 1e6, 6).alias("gap_roll_mean_10"),
-        F.round(_blkmax("_gmax5", 10), 6).alias("gap_roll_max_10"),
-        _r_cnt(_US_30D).alias("rate_30d"),
-        F.round(_r_svc(_US_30D) / 100.0, 6).alias("value_sum_30d"),
+        F.round(block_minmax(F.greatest, "_gmax5", 10, w), 6).alias("gap_roll_max_10"),
+        range_count(wr, _US_30D).alias("rate_30d"),
+        F.round(range_sum("_vc", wr, _US_30D) / 100.0, 6).alias("value_sum_30d"),
         F.round(
             F.when((var_c > 0) & (m_c > 0), F.sqrt(var_c) / m_c).otherwise(0.0), 6
         ).alias("value_cv_run"),
         snap6(
             F.when(
-                F.col("_ckn") - _lagz(F.col("_ckn"), 5) > 0,
-                (F.coalesce(F.col("_ck"), F.lit(0)) - _lagz(F.col("_ck"), 5))
-                / (F.col("_ckn") - _lagz(F.col("_ckn"), 5)),
+                F.col("_ckn") - lagz(F.col("_ckn"), 5, w) > 0,
+                (F.coalesce(F.col("_ck"), F.lit(0)) - lagz(F.col("_ck"), 5, w))
+                / (F.col("_ckn") - lagz(F.col("_ckn"), 5, w)),
             )
         ).alias("k_roll_mean_5"),
         snap6(
@@ -1277,15 +1200,15 @@ def q_feature_vector_wide(spark, sf_dir):
         ).alias("lag3_ts_gap_s"),
         snap6(_vc_sum(50) / _nrows(50) / 100).alias("roll_mean_value_50"),
         F.round(_vc_sum(50) / 100.0, 6).alias("roll_sum_value_50"),
-        F.round(_blkmin("_vmin5", 50), 6).alias("roll_min_value_50"),
-        F.round(_blkmax("_vmax5", 50), 6).alias("roll_max_value_50"),
+        F.round(block_minmax(F.least, "_vmin5", 50, w), 6).alias("roll_min_value_50"),
+        F.round(block_minmax(F.greatest, "_vmax5", 50, w), 6).alias("roll_max_value_50"),
         F.round(
             F.sqrt(F.greatest(F.lit(0.0), vc20_m2 - vc20_m * vc20_m)) / 100, 6
         ).alias("roll_std_value_20"),
-        F.round(_blkmax("_gmax5", 20), 6).alias("gap_roll_max_20"),
+        F.round(block_minmax(F.greatest, "_gmax5", 20, w), 6).alias("gap_roll_max_20"),
         F.round(_gap_mean_us(20) / 1e6, 6).alias("gap_roll_mean_20"),
-        _r_cnt(_US_12H).alias("rate_12h"),
-        F.round(_r_svc(_US_12H) / 100.0, 6).alias("value_sum_12h"),
+        range_count(wr, _US_12H).alias("rate_12h"),
+        F.round(range_sum("_vc", wr, _US_12H) / 100.0, 6).alias("value_sum_12h"),
         F.round(
             F.when(var5c > 0, (F.col("_vc") - vc5_m) / F.sqrt(var5c)).otherwise(0.0), 6
         ).alias("value_zscore_roll_5"),
@@ -1323,7 +1246,7 @@ def q_feature_vector_wide(spark, sf_dir):
         F.round(
             F.sqrt(F.greatest(F.lit(0.0), vc50_m2 - vc50_m * vc50_m)) / 100, 6
         ).alias("roll_std_value_50"),
-        F.round(_blkmin("_gmin5", 10), 6).alias("gap_roll_min_10"),
+        F.round(block_minmax(F.least, "_gmin5", 10, w), 6).alias("gap_roll_min_10"),
         F.round(F.signum(v - lagv) * F.log1p(F.abs(v - lagv)), 6).alias(
             "signed_log1p_delta_value"
         ),
@@ -1592,7 +1515,7 @@ def q_poly_residuals(spark, sf_dir):
     pytest-vs-np.polyfit oracle."""
     from astrospectro_spark.engine.regression import poly2_residuals_per_entity
 
-    us = _us()
+    us = _ts_us()
     wu = Window.partitionBy("user_id")
     span = F.greatest(F.max(us).over(wu) - F.min(us).over(wu), F.lit(1))
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -1610,7 +1533,7 @@ def q_sigma_clip_slope(spark, sf_dir):
     the DuckDB oracle unrolls the two clip iterations as CTEs."""
     from astrospectro_spark.engine.regression import sigma_clip_slope
 
-    us = _us()
+    us = _ts_us()
     ev = _t(spark, sf_dir, "events").withColumn(
         "x", (us - F.min(us).over(Window.partitionBy("user_id"))).cast("double") / 1e6
     )

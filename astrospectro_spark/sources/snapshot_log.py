@@ -13,7 +13,11 @@ needs from a table format, with the same mechanics Iceberg uses:
    plus an atomic swap of the `_snapshots/LATEST` pointer
    (`os.replace`, atomic on POSIX). Readers never see a partial
    commit: they resolve LATEST (or an explicit snapshot id) and read
-   exactly that manifest's files.
+   exactly that manifest's files. The v-file is created by
+   ``os.link(2)`` of a complete tmp file — the compare-and-swap — so
+   the table directory must be on a filesystem with POSIX hard links
+   (local disks, NFS); on one without (many FUSE and object-store
+   mounts) every commit fails.
 2. **Optimistic concurrency.** A commit records the parent snapshot it
    was based on; if LATEST moved since the writer read it, the commit
    raises ``CommitConflict`` instead of clobbering — the caller
@@ -184,16 +188,21 @@ def _entry_survives(entry: dict, stats_filter: dict) -> bool:
     return True
 
 
-def _lineage_summary(df: DataFrame) -> dict:
-    """Row count + order-insensitive checksum (same convention as the
-    lineage ledger: bit_xor of xxhash64 over all columns)."""
+def table_checksum(df: DataFrame) -> tuple[int, int]:
+    """(row count, order-insensitive checksum): ``bit_xor`` of
+    ``xxhash64`` over every column, 0 when empty, so a re-partitioned
+    recompute verifies equal. Snapshot summaries and the lineage ledger
+    (``engine.lineage``) both record it."""
     row = df.select(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])), F.lit(0)
-        ).alias("chk"),
-    ).first()
-    return {"n_rows": int(row["n"]), "checksum": int(row["chk"])}
+            F.expr(
+                "bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in df.columns) + "))"
+            ),
+            F.lit(0),
+        ).alias("h"),
+    ).collect()[0]
+    return int(row.n), int(row.h)
 
 
 def commit(
@@ -265,8 +274,8 @@ def _write_data_files(
     # summarize what LANDED (columnar re-scan of the new files), not the
     # input plan — a plan re-run would double-execute expensive lineage
     # (joins, LSH) and could observe different data on a live source
-    summary = _lineage_summary(df.sparkSession.read.parquet(files_dir))
-    return new_entries, summary
+    n_rows, chk = table_checksum(df.sparkSession.read.parquet(files_dir))
+    return new_entries, {"n_rows": n_rows, "checksum": chk}
 
 
 def compact(
@@ -331,8 +340,10 @@ def expire_snapshots(
     recent snapshots and DELETE data files referenced only by the
     dropped ones. With ``delete_orphans``, also remove data files
     referenced by NO snapshot at all (crashed writers' leftovers)
-    once older than ``orphan_grace_s`` — the grace window keeps an
-    in-flight commit's freshly written files safe.
+    once older than ``orphan_grace_s``, and the ``_snapshots/*.tmp.*``
+    files a writer crashing before its ``os.link``/``os.replace`` left
+    behind — the grace window keeps an in-flight commit's freshly
+    written files safe.
 
     Time travel contracts shrink explicitly: reads of an expired
     snapshot raise, reads of every retained snapshot are untouched
@@ -367,6 +378,14 @@ def expire_snapshots(
                     )
         data_root = os.path.join(table_dir, "data")
         now = time.time()
+        for name in os.listdir(sd):
+            p = os.path.join(sd, name)
+            try:
+                if ".tmp." in name and now - os.path.getmtime(p) > orphan_grace_s:
+                    os.unlink(p)
+                    removed_orphans += 1
+            except FileNotFoundError:
+                pass  # its writer finished (link + unlink) meanwhile
         if os.path.isdir(data_root):
             for dirpath, _dirs, files in os.walk(data_root):
                 for fn in files:

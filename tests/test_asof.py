@@ -23,14 +23,21 @@ def _salted(*args, **kw):
     return asof_join_salted(*args, hot_threshold=5, chunk_target_rows=60, **kw)
 
 
+def _salted_per_turn(*args, **kw):
+    # every conv hot, one chunk per distinct ts: the 1-3-turn fixtures
+    # below chunk too
+    return asof_join_salted(*args, hot_threshold=0, chunk_target_rows=1, **kw)
+
+
 @pytest.fixture(
-    scope="module", params=["window", "grouped", "salted"]
+    scope="module", params=["window", "grouped", "salted", "salted_per_turn"]
 )
 def asof_impl(request):
     return {
         "window": asof_join,
         "grouped": asof_join_grouped,
         "salted": _salted,
+        "salted_per_turn": _salted_per_turn,
     }[request.param]
 
 

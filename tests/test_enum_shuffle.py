@@ -3,8 +3,8 @@ exchange — string-free shuffle rows (round-4 judge item 7).
 
 Since round 6 the DEFAULT enum output KEEPS the codes (the feature-
 table contract: BIGINT role/tool/tool_backfill/prev_role, decoded
-lazily at read via ``enum_decode``); ``decode_enums=True`` decodes
-in-plan via broadcast dims. Both paths are locked bit-identical to the
+lazily at read via ``enum_decode``); decoded through
+``enum_decode``/``enum_decode_map`` it is locked bit-identical to the
 string engine here."""
 
 from __future__ import annotations
@@ -13,6 +13,13 @@ import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
+
+from astrospectro_spark.engine.windows import enum_decode, enum_decode_map
+
+
+def _decoded(coded, src, wide=False):
+    """Read-time decode of an enum-coded feature table against its source."""
+    return enum_decode(coded, src, enum_decode_map(wide)).select(*coded.columns)
 
 
 def _sorted(df):
@@ -28,9 +35,9 @@ def test_enum_shuffle_bit_parity_expr(spark, transcripts_sdf):
 
     want = _sorted(featurize_expr(transcripts_sdf, include_text=False))
     got = _sorted(
-        featurize_expr(
-            transcripts_sdf, include_text=False, enum_shuffle=True,
-            decode_enums=True,
+        _decoded(
+            featurize_expr(transcripts_sdf, include_text=False, enum_shuffle=True),
+            transcripts_sdf,
         )
     )
     assert list(got.columns) == list(want.columns)
@@ -44,11 +51,7 @@ def test_enum_shuffle_default_keeps_codes_and_decodes_at_read(
     BIGINT codes (no decode joins in the plan), and a read-time
     enum_decode against the source restores bit-parity with the string
     engine."""
-    from astrospectro_spark.engine.windows import (
-        enum_decode,
-        enum_decode_map,
-        featurize_expr,
-    )
+    from astrospectro_spark.engine.windows import featurize_expr
 
     coded = featurize_expr(transcripts_sdf, include_text=False, enum_shuffle=True)
     types = dict(coded.dtypes)
@@ -59,11 +62,7 @@ def test_enum_shuffle_default_keeps_codes_and_decodes_at_read(
     assert "BroadcastHashJoin" not in plan  # no in-plan decode dims
 
     want = _sorted(featurize_expr(transcripts_sdf, include_text=False))
-    got = _sorted(
-        enum_decode(coded, transcripts_sdf, enum_decode_map(wide=False)).select(
-            *coded.columns
-        )
-    )
+    got = _sorted(_decoded(coded, transcripts_sdf))
     pd.testing.assert_frame_equal(got, want)
 
 
@@ -80,9 +79,9 @@ def test_enum_shuffle_bit_parity_salted(spark, transcripts_sdf):
     release_cached(want_df)
     got_df = featurize_salted(
         transcripts_sdf, hot_threshold=50, chunk_target_rows=40,
-        include_text=False, enum_shuffle=True, decode_enums=True,
+        include_text=False, enum_shuffle=True,
     )
-    got = _sorted(got_df)
+    got = _sorted(_decoded(got_df, transcripts_sdf))
     release_cached(got_df)
     pd.testing.assert_frame_equal(got, want)
 
@@ -108,7 +107,7 @@ def test_enum_shuffle_handles_null_and_exotic_values(spark):
 
     want = _sorted(featurize_expr(df, include_text=False))
     got = _sorted(
-        featurize_expr(df, include_text=False, enum_shuffle=True, decode_enums=True)
+        _decoded(featurize_expr(df, include_text=False, enum_shuffle=True), df)
     )
     pd.testing.assert_frame_equal(got, want)
     r = got.set_index(["conv_id", "turn_idx"])
@@ -166,9 +165,12 @@ def test_enum_shuffle_bit_parity_wide_expr(spark, transcripts_sdf):
 
     want = _sorted(featurize_expr(transcripts_sdf, include_text=False, wide=True))
     got = _sorted(
-        featurize_expr(
-            transcripts_sdf, include_text=False, wide=True, enum_shuffle=True,
-            decode_enums=True,
+        _decoded(
+            featurize_expr(
+                transcripts_sdf, include_text=False, wide=True, enum_shuffle=True
+            ),
+            transcripts_sdf,
+            wide=True,
         )
     )
     assert list(got.columns) == list(want.columns)
@@ -188,9 +190,9 @@ def test_enum_shuffle_bit_parity_wide_salted(spark, transcripts_sdf):
     release_cached(want_df)
     got_df = featurize_salted(
         transcripts_sdf, hot_threshold=50, chunk_target_rows=40,
-        include_text=False, wide=True, enum_shuffle=True, decode_enums=True,
+        include_text=False, wide=True, enum_shuffle=True,
     )
-    got = _sorted(got_df)
+    got = _sorted(_decoded(got_df, transcripts_sdf, wide=True))
     release_cached(got_df)
     pd.testing.assert_frame_equal(got, want)
 

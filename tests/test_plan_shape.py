@@ -8,7 +8,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from astrospectro_spark.engine.asof import asof_join
+from astrospectro_spark.engine.asof import asof_join, asof_join_salted
 from astrospectro_spark.engine.windows import featurize_expr
 
 
@@ -64,6 +64,22 @@ def test_asof_single_exchange_no_python(spark, transcripts_sdf, anchors_sdf):
     c = _op_counts(plan)
     assert c.get("Exchange", 0) == 1, c
     assert c.get("Window", 0) == 1
+    assert "PythonUDF" not in plan
+
+
+def test_asof_salted_runs_asof_plan_per_chunk(spark, transcripts_sdf, anchors_sdf):
+    """The salted as-of join is asof_join's plan run twice — cold
+    conversations, then hot ones per (conv_id, chunk) — with no window
+    or sort over a per-chunk summary: 2 Window, 2 Sort."""
+    plan = _formatted(
+        spark,
+        asof_join_salted(
+            transcripts_sdf, anchors_sdf, tolerance_col="tolerance_s",
+            hot_threshold=5, chunk_target_rows=60,
+        ),
+    )
+    c = _op_counts(plan)
+    assert c.get("Window", 0) == 2 and c.get("Sort", 0) == 2, c
     assert "PythonUDF" not in plan
 
 

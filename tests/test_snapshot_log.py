@@ -375,13 +375,23 @@ def test_expire_snapshots_and_orphan_gc(spark, table):
     old_mtime = os.path.getmtime(orphan_files[0]) - 7200
     for p in orphan_files:
         os.utime(p, (old_mtime, old_mtime))
+    # plant a crashed commit's tmp residue (dumped, never linked): an old
+    # one past the grace window and a fresh one that may be in flight
+    snaps = os.path.join(table, "_snapshots")
+    old_tmp = os.path.join(snaps, f"v{pre_latest + 1:08d}.json.tmp.{_uuid.uuid4().hex}")
+    fresh_tmp = os.path.join(snaps, f"v{pre_latest + 1:08d}.json.tmp.{_uuid.uuid4().hex}")
+    for p in (old_tmp, fresh_tmp):
+        with open(p, "w") as f:
+            f.write("{}")
+    os.utime(old_tmp, (old_mtime, old_mtime))
 
     report = expire_snapshots(
         table, keep_last=1, delete_orphans=True, orphan_grace_s=3600
     )
     assert report["expired_snapshots"] == pre_latest - 1
     assert report["removed_files"] > 0
-    assert report["removed_orphans"] == len(orphan_files)
+    assert report["removed_orphans"] == len(orphan_files) + 1
+    assert not os.path.exists(old_tmp) and os.path.exists(fresh_tmp)
     # retained snapshot reads fine, full content
     assert read_table(spark, table).count() == 30
     assert current_snapshot_id(table) == pre_latest
